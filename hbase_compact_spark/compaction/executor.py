@@ -52,7 +52,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_compact_spark.compaction.checkpoint import CompactionCheckpoint
@@ -85,28 +85,46 @@ class CompactionReport:
         return [r for r in self.results if r.skipped is None]
 
 
-def _fingerprint(df: DataFrame) -> tuple[int, int, int]:
-    """(row_count, xor fingerprint, sum fingerprint) —
-    order-insensitive content identity in one distributed pass.
+def _row_hash(columns: list[str]) -> Column:
+    """Per-row xxhash64 over every data column."""
+    return F.expr("xxhash64(" + ", ".join(f"`{c}`" for c in columns) + ")")
+
+
+def _fingerprint_lanes(h_col: str) -> list[Column]:
+    """The three aggregate columns of a content fingerprint over the
+    projected per-row hash column `h_col`: n (row count), fp (bit_xor)
+    and fpsum (DECIMAL sum).
 
     bit_xor alone is blind to even-multiplicity substitutions
     ({X,X,Y} and {Y,Y,Y} xor identically), so a DECIMAL-exact SUM of
     the same per-row hashes rides along: the sum changes unless the
     multiset of hashes is preserved. Both lanes are commutative and
     ANSI-safe (sum in DECIMAL(38,0) cannot overflow below ~1e19 rows).
-    """
-    hashes = "xxhash64(" + ", ".join(f"`{c}`" for c in df.columns) + ")"
-    # project the hash ONCE, then aggregate both lanes over the
-    # projected column — aggregate-level CSE is not guaranteed, and
-    # inlining the expression into both aggregates would hash every
-    # row twice
+    Callers project the hash ONCE into `h_col` and aggregate over it —
+    aggregate-level CSE is not guaranteed, and inlining the expression
+    into both lanes would hash every row twice."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor(`{h_col}`)").alias("fp"),
+        F.expr(f"sum(cast(`{h_col}` as decimal(38,0)))").alias("fpsum"),
+    ]
+
+
+def _unused_column(base: str, columns: list[str]) -> str:
+    """`base`, suffixed with underscores until no column has the name —
+    a helper column must never shadow (and then drop) a real one."""
+    while base in columns:
+        base += "_"
+    return base
+
+
+def _fingerprint(df: DataFrame) -> tuple[int, int, int]:
+    """(row_count, xor fingerprint, sum fingerprint) —
+    order-insensitive content identity in one distributed pass (see
+    _fingerprint_lanes)."""
     row = (
-        df.select(F.expr(hashes).alias("__h"))
-        .select(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(__h)").alias("fp"),
-            F.expr("sum(cast(__h as decimal(38,0)))").alias("fpsum"),
-        )
+        df.select(_row_hash(df.columns).alias("__h"))
+        .select(*_fingerprint_lanes("__h"))
         .collect()[0]
     )
     return int(row["n"]), int(row["fp"] or 0), int(row["fpsum"] or 0)
@@ -146,8 +164,7 @@ def list_partition_files(
     # compare scheme-stripped absolute paths, so file:///, hostful
     # hdfs:// and relative roots all resolve to correct relative
     # partition keys instead of falling back to absolute parents.
-    fs, root_path, _ = _hadoop_fs(spark, table_root)
-    root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+    root_abs = _qualified_root(spark, table_root)
     out: dict[str, list[tuple[str, int]]] = {}
     for r in df.collect():  # one row per FILE: bounded metadata
         path = r["path"]
@@ -170,6 +187,21 @@ def _uri_path(uri: str) -> str:
     return parsed.path if parsed.scheme else uri
 
 
+# the scheme + authority prefix of a listed file URI — the
+# column-expression twin of _uri_path: "file:/a", "file:///a" and
+# "hdfs://nn:8020/a" all reduce to the filesystem path component
+URI_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
+
+
+def _qualified_root(spark: SparkSession, table_root: str) -> str:
+    """`table_root` qualified through its Hadoop FileSystem, scheme-
+    stripped and without a trailing slash — the prefix every listed
+    file path (after URI_SCHEME_RE) shares, so file:///, hostful
+    hdfs:// and relative roots all key files identically."""
+    fs, root_path, _ = _hadoop_fs(spark, table_root)
+    return _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+
+
 def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
     """Every data file under `table_root` as a DataFrame
     (partition string, relpath string, size long) — the fully
@@ -180,8 +212,7 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
     collects. This is the 10⁶-file path; callers that genuinely need a
     per-partition dict use list_partition_files (one partition at a
     time, bounded)."""
-    fs, root_path, _ = _hadoop_fs(spark, table_root)
-    root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+    root_abs = _qualified_root(spark, table_root)
 
     df = (
         spark.read.format("binaryFile")
@@ -190,10 +221,7 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
         .load(table_root)
         .select("path", "length")
     )
-    # scheme strip mirrors _uri_path: "file:/a", "file:///a" and
-    # "hdfs://nn:8020/a" all reduce to the filesystem path component
-    scheme_re = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
-    abs_path = F.regexp_replace(F.col("path"), scheme_re, "")
+    abs_path = F.regexp_replace(F.col("path"), URI_SCHEME_RE, "")
     parent = F.regexp_replace(abs_path, r"/[^/]*$", "")
     name = F.regexp_extract(abs_path, r"[^/]+$", 0)
     partition = (
@@ -267,8 +295,6 @@ def fileset_signature(names: list[str]) -> str:
     the checkpoint distinguish 'done and unchanged' from 'done but new
     files arrived since' — the arrival of any file re-opens the
     partition for compaction."""
-    import hashlib
-
     items = sorted(posixpath.basename(n) for n in names)
     return hashlib.md5("\n".join(items).encode()).hexdigest()[:16]
 
@@ -287,8 +313,6 @@ def _compact_one(
     names). `cluster_by` z-orders the rewrite across those columns
     (multi-column min/max pruning) instead of the plain
     repartition + per-file sort."""
-    from pyspark.sql import Observation
-
     part_dir = posixpath.join(table_root, rel) if rel else table_root
     src = spark.read.parquet(*[p for p, _ in files])
     # Pack the small-file scan into byte-capped partitions: Spark's
@@ -323,32 +347,13 @@ def _compact_one(
     else:
         # fingerprint the source DURING the rewrite pass (Observation
         # metrics) instead of a separate scan: 2 passes per partition
-        # (write+observe, verify read-back) rather than 3
-        hashes = (
-            "xxhash64(" + ", ".join(f"`{c}`" for c in src.columns) + ")"
-        )
+        # (write+observe, verify read-back) rather than 3. The hash
+        # column is observed, then dropped before the write.
         obs = Observation()
-        # hash each row ONCE into a named column, observe both lanes
-        # over it, then drop it before the write — inlining the hash
-        # expression into both aggregates would evaluate it twice per
-        # row (no aggregate-level CSE guarantee)
-        # a guaranteed-unused hash column name: withColumn on a NAME
-        # the table already uses would silently REPLACE (then drop)
-        # that real column, losing it from the rewrite and failing
-        # verification forever after
-        h_col = "__fp_h"
-        while h_col in src.columns:
-            h_col += "_"
+        h_col = _unused_column("__fp_h", src.columns)
         observed = (
-            src.withColumn(h_col, F.expr(hashes))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(`{h_col}`)").alias("fp"),
-                F.expr(
-                    f"sum(cast(`{h_col}` as decimal(38,0)))"
-                ).alias("fpsum"),
-            )
+            src.withColumn(h_col, _row_hash(src.columns))
+            .observe(obs, *_fingerprint_lanes(h_col))
             .drop(h_col)
         )
         writer = observed.repartition(n_bins)
@@ -456,9 +461,7 @@ def _compact_batch(
         all_files = [p for _rel, files, _n, _r in items for p, _ in files]
         schema = bspark.read.parquet(all_files[0]).schema
         src = bspark.read.schema(schema).parquet(*all_files)
-    bcol = "__hcs_rel"
-    while bcol in src.columns:  # never shadow a real column
-        bcol += "_"
+    bcol = _unused_column("__hcs_rel", src.columns)
     # input_file_name returns a percent-ENCODED URI ("x y" -> "x%20y",
     # "%" -> "%25"): decode before extracting the tag, or encoded-name
     # partitions silently fail to match their planned rel. url_decode
@@ -478,22 +481,15 @@ def _compact_batch(
         # (file:///t, hdfs://nn/t) into cwd-prefixed nonsense and tag
         # every row '' (the unknown-tag guard would then kill the
         # whole batch after the rewrite).
-        fs_root, root_path, _ = _hadoop_fs(spark, table_root)
-        root_abs = _uri_path(str(fs_root.makeQualified(root_path))).rstrip(
-            "/"
-        )
-        scheme_re = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
-        fname_abs = F.regexp_replace(fname, scheme_re, "")
+        root_abs = _qualified_root(spark, table_root)
+        fname_abs = F.regexp_replace(fname, URI_SCHEME_RE, "")
         tag = F.regexp_extract(
             fname_abs,
             ".*\\Q" + root_abs + "\\E/(.*)/[^/]+$",
             1,
         )
-    data_cols = list(src.columns)
-    hashes = "xxhash64(" + ", ".join(f"`{c}`" for c in data_cols) + ")"
-    h_col = "__fp_h"
-    while h_col in src.columns:
-        h_col += "_"
+    row_hash = _row_hash(src.columns)
+    h_col = _unused_column("__fp_h", src.columns)
 
     tmp_batch = posixpath.join(
         table_root, f"_compact_batchtmp_{uuid.uuid4().hex[:10]}"
@@ -524,15 +520,8 @@ def _compact_batch(
         count_thread.start()
         obs = Observation()
         observed = (
-            src.withColumn(h_col, F.expr(hashes))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(`{h_col}`)").alias("fp"),
-                F.expr(f"sum(cast(`{h_col}` as decimal(38,0)))").alias(
-                    "fpsum"
-                ),
-            )
+            src.withColumn(h_col, row_hash)
+            .observe(obs, *_fingerprint_lanes(h_col))
             .drop(h_col)
             .withColumn(bcol, tag)
         )
@@ -582,10 +571,7 @@ def _compact_batch(
         relist_out: dict = {}
         relist_thread = None
         if dirs_ok:
-            fs_r, root_path_r, _ = _hadoop_fs(spark, table_root)
-            r_abs = _uri_path(
-                str(fs_r.makeQualified(root_path_r))
-            ).rstrip("/")
+            r_abs = _qualified_root(spark, table_root)
 
             def run_relist() -> None:
                 try:
@@ -625,15 +611,9 @@ def _compact_batch(
             relist_thread.start()
         rewritten = bspark.read.parquet(tmp_batch)
         after_rows = (
-            rewritten.withColumn(h_col, F.expr(hashes))
+            rewritten.withColumn(h_col, row_hash)
             .groupBy(bcol)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(`{h_col}`)").alias("fp"),
-                F.expr(f"sum(cast(`{h_col}` as decimal(38,0)))").alias(
-                    "fpsum"
-                ),
-            )
+            .agg(*_fingerprint_lanes(h_col))
             .collect()
         )
         after_n = {r[bcol]: int(r["n"]) for r in after_rows}

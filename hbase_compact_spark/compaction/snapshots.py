@@ -5,10 +5,10 @@ The swap-manifest path (executor/reader) makes IN-PLACE compaction
 safe on object stores; this module is the next rung: a tiny log of
 COMPLETE table states under `<root>/_snapshots/v<NNNNNNNNNNNN>.json`.
 Each snapshot lists every live data file (relative path + size) plus
-lineage metadata. Commit is a temp-write + rename onto the next
-version number — rename-if-absent is the optimistic-concurrency
-token, so two concurrent committers can both win consecutive numbers
-but never clobber each other (the loser re-reads and retries).
+lineage metadata. Commit is a temp-write + hard link onto the next
+version number — link-if-absent is the optimistic-concurrency token,
+so two concurrent committers can both win consecutive numbers but
+never clobber each other (the loser re-reads and retries).
 
 Under the log, compaction becomes append-only (`snapshot_compact`):
 rewritten files land beside the old ones under fresh uuid names, the
@@ -42,8 +42,9 @@ from pyspark.sql import functions as F
 from hbase_compact_spark.compaction.executor import (
     _fingerprint,
     _hadoop_fs,
-    _read_json,
+    _qualified_root,
     _rm,
+    _unused_column,
     _uri_path,
     _write_json,
 )
@@ -585,36 +586,89 @@ class SnapshotConflictError(RuntimeError):
     list and silently drop the winner's files."""
 
 
-class SnapshotLog:
-    """The version log for one table root."""
+def _version_name(version: int) -> str:
+    """File name of a version's JSON under the log dir — the one
+    place the zero-padded layout is spelled."""
+    return f"v{version:012d}.json"
 
-    def __init__(self, spark: SparkSession, table_root: str):
-        self.spark = spark
+
+def _manifest_arrow(
+    files: list[tuple[str, int]],
+    stats: dict[str, dict],
+    blooms: dict[str, dict],
+):
+    """Driver-side lists -> pyarrow table in canonical manifest shape
+    (relpath, size, stats, blooms), payloads as JSON strings."""
+    import json as _json
+
+    import pyarrow as pa
+
+    def _payload(d: dict) -> "pa.Array":
+        return pa.array(
+            [_json.dumps(d[p]) if p in d else None for p, _ in files],
+            pa.string(),
+        )
+
+    return pa.table(
+        {
+            "relpath": pa.array([p for p, _ in files], pa.string()),
+            "size": pa.array([int(s) for _, s in files], pa.int64()),
+            "stats": _payload(stats),
+            "blooms": _payload(blooms),
+        }
+    )
+
+
+class PureSnapshotLog:
+    """The snapshot log of one table root, read over the local
+    filesystem with os/json/pyarrow — no SparkSession, no JVM gateway.
+    Version JSONs, refs and manifests are plain files, so one set of
+    read accessors serves every caller: SnapshotLog inherits them and
+    adds the Spark/Hadoop-side writes, and the Python data-source
+    planners (sources/snapshot_table.py, streaming/table_tail.py),
+    which run in workers without a py4j bridge, use this class
+    directly.
+
+    Local-path contract: `table_root` may carry a `file:` scheme; an
+    object-store deployment routes the file IO through a pyarrow
+    filesystem. `spark` is None by contract — code shared with
+    SnapshotLog (scan_plan) branches on it to skip Spark-only
+    strategies (the distributed manifest scan)."""
+
+    spark = None
+
+    def __init__(self, table_root: str):
         self.table_root = table_root
         self.log_dir = posixpath.join(table_root, SNAPSHOT_DIR)
-        self._fs, self._root, self._jvm = _hadoop_fs(spark, table_root)
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._local_log = posixpath.join(_uri_path(table_root), SNAPSHOT_DIR)
 
     # ---------------------------------------------------------- reads
     def versions(self) -> list[int]:
-        p = self._Path(self.log_dir)
-        if not self._fs.exists(p):
+        try:
+            names = os.listdir(self._local_log)
+        except FileNotFoundError:
             return []
-        out = []
-        for st in self._fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        return sorted(
+            int(n[1:-5])
+            for n in names
+            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
+        )
 
     def latest(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
     def read(self, version: int) -> dict:
-        return _read_json(
-            self._fs, self._jvm, self._Path(self.log_dir, f"v{version:012d}.json")
-        )
+        import json as _json
+
+        with open(posixpath.join(self._local_log, _version_name(version))) as f:
+            return _json.load(f)
+
+    def _version_or_latest(self, version: int | None) -> int:
+        v = self.latest() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
+        return v
 
     # ------------------------------------------------------ named refs
     # Iceberg-style refs: human-stable names for snapshot versions.
@@ -629,18 +683,236 @@ class SnapshotLog:
 
     def refs(self) -> dict[str, dict]:
         """{name: {"version", "kind", "created_at"}} of every ref."""
-        p = self._Path(self.refs_dir)
-        if not self._fs.exists(p):
+        import json as _json
+
+        d = posixpath.join(self._local_log, REFS_SUBDIR)
+        try:
+            names = os.listdir(d)
+        except FileNotFoundError:
             return {}
         out = {}
-        for st in self._fs.listStatus(p):
-            name = st.getPath().getName()
+        for name in names:
             if name.endswith(".json") and not name.startswith("_tmp-"):
-                out[name[:-5]] = _read_json(
-                    self._fs, self._jvm, st.getPath()
-                )
+                with open(posixpath.join(d, name)) as f:
+                    out[name[:-5]] = _json.load(f)
         return out
 
+    def resolve_ref(self, name: str) -> int:
+        ref = self.refs().get(name)
+        if ref is None:
+            raise FileNotFoundError(
+                f"no ref {name!r} under {self.refs_dir} "
+                f"(have: {sorted(self.refs())})"
+            )
+        return int(ref["version"])
+
+    # ------------------------------------------ merge-on-read deletes
+    @property
+    def deletes_dir(self) -> str:
+        return posixpath.join(self.log_dir, DELETES_SUBDIR)
+
+    def delete_files(self, version: int | None = None) -> list[tuple[str, int]]:
+        """[(name, n)] of the merge-on-read delete entries applying to
+        a snapshot (Iceberg v2), kind-tagged by name prefix: a `d-`
+        entry is a POSITIONAL delete parquet of (relpath string, pos
+        long) rows (n = entry rows); an `e-` entry is an EQUALITY
+        delete dir of keys/ + scope/ parquet (n = key rows). Both live
+        under `_snapshots/deletes/` and subtract rows from the listed
+        data files at read time. Empty for COW-only tables — the read
+        path then skips the subtraction entirely."""
+        v = self._version_or_latest(version)
+        return [
+            (str(n), int(r)) for n, r in self.read(v).get("delete_files") or []
+        ]
+
+    # ------------------------------------------------- manifest layer
+    @property
+    def manifest_dir(self) -> str:
+        return posixpath.join(self.log_dir, MANIFEST_SUBDIR)
+
+    def _manifest_local(self, name: str) -> str:
+        """Local filesystem path of a manifest file/dir."""
+        return posixpath.join(self._local_log, MANIFEST_SUBDIR, name)
+
+    def _resolve(self, version: int) -> dict:
+        """{"files", "stats", "blooms"} of a snapshot, whichever of
+        the two encodings it uses: `manifest` reference (current — the
+        per-file metadata lives in an immutable parquet manifest, the
+        JSON stays O(1) in file count) or inline lists (legacy
+        snapshots written before the spill; still readable)."""
+        snap = self.read(version)
+        name = snap.get("manifest")
+        if name:
+            return _load_manifest(self._manifest_local(name))
+        return {
+            "files": sorted(
+                (f[0], int(f[1])) for f in snap.get("files") or []
+            ),
+            "stats": snap.get("stats") or {},
+            "blooms": snap.get("blooms") or {},
+        }
+
+    def files(self, version: int | None = None) -> list[tuple[str, int]]:
+        """[(relative path, size)] of the given (default: latest)
+        snapshot. Column-pruned: the stats/bloom payload columns are
+        never read, so this really is names+sizes only on the driver
+        at any file count."""
+        snap = self.read(self._version_or_latest(version))
+        name = snap.get("manifest")
+        if name:
+            return list(_load_manifest_files(self._manifest_local(name)))
+        return sorted((f[0], int(f[1])) for f in snap.get("files") or [])
+
+    def stats(self, version: int | None = None) -> dict[str, dict]:
+        """Per-file column stats of the given (default: latest)
+        snapshot: {relpath: {"rows": n, "cols": {col: [min, max]}}}.
+        Empty if the snapshot was never annotated."""
+        return self._resolve(self._version_or_latest(version))["stats"]
+
+    def blooms(self, version: int | None = None) -> dict[str, dict]:
+        """Per-file bloom filters {relpath: {col: bloom}} of the given
+        (default: latest) snapshot; empty if never annotated."""
+        return self._resolve(self._version_or_latest(version))["blooms"]
+
+    def schema(self, version: int | None = None):
+        """(StructType, partition_cols) recorded on the given
+        (default: latest) snapshot, or (None, []) if the table has
+        never evolved — readers then fall back to parquet inference."""
+        from pyspark.sql.types import StructType
+
+        blob = self.read(self._version_or_latest(version)).get("schema")
+        if not blob:
+            return None, []
+        return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
+
+    def manifest_summary(self, name: str) -> tuple[int, int]:
+        """(n_files, total_bytes) of a manifest — column-pruned read,
+        only the size column is materialized."""
+        import pyarrow.compute as pc
+
+        tbl = _read_manifest_table(
+            self._manifest_local(name), columns=["size"]
+        )
+        return tbl.num_rows, int(pc.sum(tbl.column("size")).as_py() or 0)
+
+    def manifest_table(self, version: int):
+        """The version's manifest as a pyarrow table in canonical
+        (relpath, size, stats, blooms) shape — shard directories are
+        read whole, legacy inline snapshots are synthesized. This is
+        the carry payload for pure commits: stats/bloom annotations
+        on surviving files ride through untouched."""
+        snap = self.read(version)
+        name = snap.get("manifest")
+        if name:
+            tbl = _read_manifest_table(self._manifest_local(name))
+            return tbl.select(["relpath", "size", "stats", "blooms"])
+        return _manifest_arrow(
+            sorted((f[0], int(f[1])) for f in snap.get("files") or []),
+            snap.get("stats") or {},
+            snap.get("blooms") or {},
+        )
+
+    # --------------------------------------------------------- writes
+    def _claim_version(self, n: int, payload: dict) -> bool:
+        """Publish `payload` as version n iff no version n exists: the
+        JSON is written complete under a tmp name, then hard-linked
+        into place — os.link fails when the name exists, which makes
+        the link the ONE commit point (rename-if-absent) shared by
+        every committer. False = another committer holds n. The tmp
+        name never survives, won or lost."""
+        import json as _json
+
+        os.makedirs(self._local_log, exist_ok=True)
+        tmp = posixpath.join(
+            self._local_log, f"_tmp-{uuid.uuid4().hex[:10]}.json"
+        )
+        with open(tmp, "w") as f:
+            _json.dump(payload, f)
+        try:
+            os.link(tmp, posixpath.join(self._local_log, _version_name(n)))
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+
+    # The pure WRITE path exists for one caller: the Python
+    # data-source writer (sources/snapshot_table.py), whose commit()
+    # runs in a Spark-spawned Python worker with no py4j gateway —
+    # the same process class that plans pure reads. Scale note: the
+    # parent-manifest union is one pyarrow concat in one worker
+    # (~100 bytes/file ⇒ ~100 MB at 10⁶ files) — it never visits the
+    # Spark driver, and a deployment with a live driver session can
+    # route the same commit through SnapshotLog.commit_append's fully
+    # distributed union instead.
+
+    def commit_manifest_table(
+        self,
+        tbl,
+        op: str,
+        parent: int | None,
+        *,
+        carry_delete_files: bool = True,
+        schema_blob: dict | None = None,
+    ) -> int:
+        """Atomic JVM-free commit: write `tbl` (pyarrow, manifest
+        shape) as a fresh immutable manifest, then claim version
+        parent+1 (_claim_version, the same commit point as
+        SnapshotLog.commit) — a loser of a concurrent race raises
+        SnapshotConflictError instead of silently dropping the
+        winner's files. The parent's declared schema always carries;
+        its pending MOR delete entries carry unless the caller
+        replaced the files they scope (carry_delete_files=False — the
+        overwrite path)."""
+        import pyarrow.parquet as pq
+
+        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
+        man_local = self._manifest_local(name)
+        os.makedirs(posixpath.dirname(man_local), exist_ok=True)
+        pq.write_table(tbl, man_local)
+        payload = {
+            "op": op,
+            "committed_at": int(time.time()),
+            "manifest": name,
+            "n_files": tbl.num_rows,
+            "total_bytes": int(
+                sum(x.as_py() or 0 for x in tbl.column("size"))
+            ),
+        }
+        psnap = self.read(parent) if parent else {}
+        if psnap.get("schema"):
+            payload["schema"] = psnap["schema"]
+        elif schema_blob:
+            # writer-declared schema (the SQL writer knows the INSERT
+            # schema) — what keeps a ZERO-file commit readable as an
+            # empty table instead of an unreadable dead end
+            payload["schema"] = schema_blob
+        if carry_delete_files and psnap.get("delete_files"):
+            payload["delete_files"] = psnap["delete_files"]
+        n = (parent or 0) + 1
+        payload["version"] = n
+        payload["parent"] = parent if parent else None
+        if not self._claim_version(n, payload):
+            os.unlink(man_local)
+            raise SnapshotConflictError(
+                f"commit derived from v{parent} but v{n} already "
+                f"exists in {self.log_dir}; re-read and re-derive"
+            )
+        return n
+
+
+class SnapshotLog(PureSnapshotLog):
+    """The version log for one table root: every read is inherited
+    from PureSnapshotLog; this class adds the Spark- and Hadoop-side
+    work — ref publication, distributed manifests, commits."""
+
+    def __init__(self, spark: SparkSession, table_root: str):
+        super().__init__(table_root)
+        self.spark = spark
+        self._fs, self._root, self._jvm = _hadoop_fs(spark, table_root)
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+
+    # ------------------------------------------------------ named refs
     def set_ref(
         self, name: str, version: int | None = None, *, kind: str = "tag"
     ) -> dict:
@@ -721,88 +993,7 @@ class SnapshotLog:
             self._Path(self.refs_dir, f"{name}.json"), False
         )
 
-    # ------------------------------------------ merge-on-read deletes
-    @property
-    def deletes_dir(self) -> str:
-        return posixpath.join(self.log_dir, DELETES_SUBDIR)
-
-    def delete_files(self, version: int | None = None) -> list[tuple[str, int]]:
-        """[(name, n)] of the merge-on-read delete entries applying to
-        a snapshot (Iceberg v2), kind-tagged by name prefix: a `d-`
-        entry is a POSITIONAL delete parquet of (relpath string, pos
-        long) rows (n = entry rows); an `e-` entry is an EQUALITY
-        delete dir of keys/ + scope/ parquet (n = key rows). Both live
-        under `_snapshots/deletes/` and subtract rows from the listed
-        data files at read time. Empty for COW-only tables — the read
-        path then skips the subtraction entirely."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return [
-            (str(n), int(r)) for n, r in self.read(v).get("delete_files") or []
-        ]
-
-    def resolve_ref(self, name: str) -> int:
-        ref = self.refs().get(name)
-        if ref is None:
-            raise FileNotFoundError(
-                f"no ref {name!r} under {self.refs_dir} "
-                f"(have: {sorted(self.refs())})"
-            )
-        return int(ref["version"])
-
     # ------------------------------------------------- manifest layer
-    @property
-    def manifest_dir(self) -> str:
-        return posixpath.join(self.log_dir, MANIFEST_SUBDIR)
-
-    def _manifest_local(self, name: str) -> str:
-        """Local filesystem path of a manifest file/dir (same
-        local-path assumption as the footer-stats pass; an
-        object-store deployment routes this through a pyarrow
-        filesystem)."""
-        return posixpath.join(_uri_path(self.manifest_dir), name)
-
-    def _resolve(self, version: int) -> dict:
-        """{"files", "stats", "blooms"} of a snapshot, whichever of
-        the two encodings it uses: `manifest` reference (current — the
-        per-file metadata lives in an immutable parquet manifest, the
-        JSON stays O(1) in file count) or inline lists (legacy
-        snapshots written before the spill; still readable)."""
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            return _load_manifest(self._manifest_local(name))
-        return {
-            "files": sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            ),
-            "stats": snap.get("stats") or {},
-            "blooms": snap.get("blooms") or {},
-        }
-
-    def files(self, version: int | None = None) -> list[tuple[str, int]]:
-        """[(relative path, size)] of the given (default: latest)
-        snapshot. Column-pruned: the stats/bloom payload columns are
-        never read, so this really is names+sizes only on the driver
-        at any file count."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
-        if name:
-            return list(_load_manifest_files(self._manifest_local(name)))
-        return sorted((f[0], int(f[1])) for f in snap.get("files") or [])
-
-    def blooms(self, version: int | None = None) -> dict[str, dict]:
-        """Per-file bloom filters {relpath: {col: bloom}} of the given
-        (default: latest) snapshot; empty if never annotated."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["blooms"]
-
     def manifest_df(self, version: int | None = None) -> DataFrame:
         """The snapshot's per-file metadata as a Spark DataFrame
         (relpath, size, stats, blooms — the JSON-string payload
@@ -812,11 +1003,8 @@ class SnapshotLog:
         the spill and are small by construction)."""
         import json as _json
 
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
+        v = self._version_or_latest(version)
+        name = self.read(v).get("manifest")
         if name:
             return self.spark.read.schema(MANIFEST_SCHEMA_DDL).parquet(
                 posixpath.join(self.manifest_dir, name)
@@ -844,36 +1032,14 @@ class SnapshotLog:
         passes at scale) write a DataFrame in MANIFEST_SCHEMA_DDL shape
         under `manifest_dir/<m-uuid>` instead and pass that name to
         commit() — the payload then never visits the driver."""
-        import json as _json
-
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        stats = stats or {}
-        blooms = blooms or {}
         name = f"m-{uuid.uuid4().hex[:12]}.parquet"
         self._fs.mkdirs(self._Path(self.manifest_dir))
-        tbl = pa.table(
-            {
-                "relpath": pa.array([p for p, _ in files], pa.string()),
-                "size": pa.array([int(s) for _, s in files], pa.int64()),
-                "stats": pa.array(
-                    [
-                        _json.dumps(stats[p]) if p in stats else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-                "blooms": pa.array(
-                    [
-                        _json.dumps(blooms[p]) if p in blooms else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-            }
+        pq.write_table(
+            _manifest_arrow(files, stats or {}, blooms or {}),
+            self._manifest_local(name),
         )
-        pq.write_table(tbl, self._manifest_local(name))
         return name
 
     def commit_append(
@@ -923,39 +1089,6 @@ class SnapshotLog:
             raise RuntimeError(f"manifest copy failed: {name} -> {new}")
         return new
 
-    def manifest_summary(self, name: str) -> tuple[int, int]:
-        """(n_files, total_bytes) of a manifest — column-pruned read,
-        only the size column is materialized."""
-        import pyarrow.compute as pc
-
-        tbl = _read_manifest_table(
-            self._manifest_local(name), columns=["size"]
-        )
-        return tbl.num_rows, int(pc.sum(tbl.column("size")).as_py() or 0)
-
-    def schema(self, version: int | None = None):
-        """(StructType, partition_cols) recorded on the given
-        (default: latest) snapshot, or (None, []) if the table has
-        never evolved — readers then fall back to parquet inference."""
-        from pyspark.sql.types import StructType
-
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        blob = self.read(v).get("schema")
-        if not blob:
-            return None, []
-        return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
-
-    def stats(self, version: int | None = None) -> dict[str, dict]:
-        """Per-file column stats of the given (default: latest)
-        snapshot: {relpath: {"rows": n, "cols": {col: [min, max]}}}.
-        Empty if the snapshot was never annotated."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["stats"]
-
     # --------------------------------------------------------- writes
     def commit(
         self,
@@ -968,8 +1101,8 @@ class SnapshotLog:
         manifest: str | None = None,
         extra: dict | None = None,
     ) -> int:
-        """Atomically claim the next version; rename-if-absent is the
-        only commit point. With an EXPLICIT `parent` (every caller
+        """Atomically claim the next version (_claim_version is the
+        only commit point). With an EXPLICIT `parent` (every caller
         whose file list was derived from that snapshot), losing the
         race raises SnapshotConflictError instead of retrying: the
         stale file list would silently drop the winner's files. Only
@@ -985,8 +1118,6 @@ class SnapshotLog:
         the manifest ON EXECUTORS (DataFrame write in
         MANIFEST_SCHEMA_DDL shape) pass its name via `manifest` with
         files=None and the payload never visits the driver."""
-        fs, Path = self._fs, self._Path
-        fs.mkdirs(Path(self.log_dir))
         if manifest is None:
             if files is None:
                 raise ValueError("commit needs files or a manifest")
@@ -1021,13 +1152,11 @@ class SnapshotLog:
             carried = self.read(pv).get("delete_files") if pv else None
             if carried:
                 payload["delete_files"] = carried
-        tmp = Path(self.log_dir, f"_tmp-{uuid.uuid4().hex[:10]}.json")
 
         def _abort() -> None:
-            fs.delete(tmp, False)
             # the manifest belongs to no committed version: remove it
             # rather than leaving an orphan for expire to sweep
-            fs.delete(Path(self.manifest_dir, manifest), True)
+            self._fs.delete(self._Path(self.manifest_dir, manifest), True)
 
         for _ in range(50):
             n = (self.latest() or 0) + 1
@@ -1038,9 +1167,7 @@ class SnapshotLog:
                     f"latest in {self.log_dir}; re-read and re-derive"
                 )
             payload["version"], payload["parent"] = n, parent if parent is not None else n - 1 or None
-            _write_json(fs, Path, tmp, payload)
-            dest = Path(self.log_dir, f"v{n:012d}.json")
-            if not fs.exists(dest) and fs.rename(tmp, dest):
+            if self._claim_version(n, payload):
                 return n
         _abort()
         raise RuntimeError(f"could not claim a snapshot version in {self.log_dir}")
@@ -1083,276 +1210,14 @@ class SnapshotLog:
             None, op=op, parent=parent, schema=schema, manifest=name
         )
 
-class PureSnapshotLog:
-    """READ-ONLY duck-type of SnapshotLog over the local filesystem —
-    no SparkSession, no JVM gateway. This is what lets snapshot-log
-    PLANNING run inside a Python data-source worker
-    (sources/snapshot_table.py): the worker has no py4j bridge, but
-    version JSONs, refs, manifests, and delete-entry metadata are all
-    plain files, so every read accessor the pruning path touches
-    (read/files/_resolve/schema/resolve_ref/delete_files/
-    _manifest_local) is reproducible with json + pyarrow alone.
-    Same local-path assumption as SnapshotLog._manifest_local and the
-    streaming tail's _TailLog; an object-store deployment routes
-    through a pyarrow filesystem. `spark` is None by contract — code
-    shared with SnapshotLog (scan_plan) branches on it to skip
-    Spark-only strategies (the distributed manifest scan)."""
-
-    spark = None
-
-    def __init__(self, table_root: str):
-        self.table_root = table_root
-        self._local_root = _uri_path(table_root)
-        self.log_dir = posixpath.join(table_root, SNAPSHOT_DIR)
-        self._local_log = posixpath.join(self._local_root, SNAPSHOT_DIR)
-
-    # ---------------------------------------------------------- reads
-    def versions(self) -> list[int]:
-        try:
-            names = os.listdir(self._local_log)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-
-    def latest(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def read(self, version: int) -> dict:
-        import json as _json
-
-        with open(
-            posixpath.join(self._local_log, f"v{version:012d}.json")
-        ) as f:
-            return _json.load(f)
-
-    @property
-    def refs_dir(self) -> str:
-        return posixpath.join(self.log_dir, REFS_SUBDIR)
-
-    def refs(self) -> dict[str, dict]:
-        import json as _json
-
-        d = posixpath.join(self._local_log, REFS_SUBDIR)
-        try:
-            names = os.listdir(d)
-        except FileNotFoundError:
-            return {}
-        out = {}
-        for name in names:
-            if name.endswith(".json") and not name.startswith("_tmp-"):
-                with open(posixpath.join(d, name)) as f:
-                    out[name[:-5]] = _json.load(f)
-        return out
-
-    def resolve_ref(self, name: str) -> int:
-        ref = self.refs().get(name)
-        if ref is None:
-            raise FileNotFoundError(
-                f"no ref {name!r} under {self.refs_dir} "
-                f"(have: {sorted(self.refs())})"
-            )
-        return int(ref["version"])
-
-    @property
-    def deletes_dir(self) -> str:
-        return posixpath.join(self.log_dir, DELETES_SUBDIR)
-
-    def delete_files(self, version: int | None = None) -> list[tuple[str, int]]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return [
-            (str(n), int(r)) for n, r in self.read(v).get("delete_files") or []
-        ]
-
-    @property
-    def manifest_dir(self) -> str:
-        return posixpath.join(self.log_dir, MANIFEST_SUBDIR)
-
-    def _manifest_local(self, name: str) -> str:
-        return posixpath.join(self._local_log, MANIFEST_SUBDIR, name)
-
-    def _resolve(self, version: int) -> dict:
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            return _load_manifest(self._manifest_local(name))
-        return {
-            "files": sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            ),
-            "stats": snap.get("stats") or {},
-            "blooms": snap.get("blooms") or {},
-        }
-
-    def files(self, version: int | None = None) -> list[tuple[str, int]]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
-        if name:
-            return list(_load_manifest_files(self._manifest_local(name)))
-        return sorted((f[0], int(f[1])) for f in snap.get("files") or [])
-
-    def stats(self, version: int | None = None) -> dict[str, dict]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["stats"]
-
-    def blooms(self, version: int | None = None) -> dict[str, dict]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["blooms"]
-
-    def schema(self, version: int | None = None):
-        from pyspark.sql.types import StructType
-
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        blob = self.read(v).get("schema")
-        if not blob:
-            return None, []
-        return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
-
-    # --------------------------------------------------------- writes
-    # The pure WRITE path exists for one caller: the Python
-    # data-source writer (sources/snapshot_table.py), whose commit()
-    # runs in a Spark-spawned Python worker with no py4j gateway —
-    # the same process class that plans pure reads. Same local-
-    # filesystem contract as the reads; an object-store deployment
-    # routes the file IO through a pyarrow filesystem and replaces
-    # the os.link claim with its conditional-put (if-none-match)
-    # twin. Scale note: the parent-manifest union below is one
-    # pyarrow concat in one worker (~100 bytes/file ⇒ ~100 MB at
-    # 10⁶ files) — it never visits the Spark driver, and a
-    # deployment with a live driver session can route the same
-    # commit through SnapshotLog.commit_append's fully distributed
-    # union instead.
-
-    def manifest_table(self, version: int):
-        """The version's manifest as a pyarrow table in canonical
-        (relpath, size, stats, blooms) shape — shard directories are
-        read whole, legacy inline snapshots are synthesized. This is
-        the carry payload for pure commits: stats/bloom annotations
-        on surviving files ride through untouched."""
-        import json as _json
-
-        import pyarrow as pa
-
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            tbl = _read_manifest_table(self._manifest_local(name))
-            return tbl.select(["relpath", "size", "stats", "blooms"])
-        files = sorted((f[0], int(f[1])) for f in snap.get("files") or [])
-        st = snap.get("stats") or {}
-        bl = snap.get("blooms") or {}
-        return pa.table(
-            {
-                "relpath": pa.array([p for p, _ in files], pa.string()),
-                "size": pa.array([s for _, s in files], pa.int64()),
-                "stats": pa.array(
-                    [
-                        _json.dumps(st[p]) if p in st else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-                "blooms": pa.array(
-                    [
-                        _json.dumps(bl[p]) if p in bl else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-            }
-        )
-
-    def commit_manifest_table(
-        self,
-        tbl,
-        op: str,
-        parent: int | None,
-        *,
-        carry_delete_files: bool = True,
-        schema_blob: dict | None = None,
-    ) -> int:
-        """Atomic JVM-free commit: write `tbl` (pyarrow, manifest
-        shape) as a fresh immutable manifest, then claim version
-        parent+1 by hard-linking the payload JSON into place —
-        os.link fails if the name exists, so rename-if-absent
-        semantics match SnapshotLog.commit exactly and a loser of a
-        concurrent race raises SnapshotConflictError instead of
-        silently dropping the winner's files. The parent's declared
-        schema always carries; its pending MOR delete entries carry
-        unless the caller replaced the files they scope
-        (carry_delete_files=False — the overwrite path)."""
-        import json as _json
-
-        import pyarrow.parquet as pq
-
-        man_dir = posixpath.join(self._local_log, MANIFEST_SUBDIR)
-        os.makedirs(man_dir, exist_ok=True)
-        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
-        man_local = posixpath.join(man_dir, name)
-        pq.write_table(tbl, man_local)
-        payload = {
-            "op": op,
-            "committed_at": int(time.time()),
-            "manifest": name,
-            "n_files": tbl.num_rows,
-            "total_bytes": int(
-                sum(x.as_py() or 0 for x in tbl.column("size"))
-            ),
-        }
-        psnap = self.read(parent) if parent else {}
-        if psnap.get("schema"):
-            payload["schema"] = psnap["schema"]
-        elif schema_blob:
-            # writer-declared schema (the SQL writer knows the INSERT
-            # schema) — what keeps a ZERO-file commit readable as an
-            # empty table instead of an unreadable dead end
-            payload["schema"] = schema_blob
-        if carry_delete_files and psnap.get("delete_files"):
-            payload["delete_files"] = psnap["delete_files"]
-        n = (parent or 0) + 1
-        payload["version"] = n
-        payload["parent"] = parent if parent else None
-        tmp = posixpath.join(
-            self._local_log, f"_tmp-{uuid.uuid4().hex[:10]}.json"
-        )
-        with open(tmp, "w") as f:
-            _json.dump(payload, f)
-        dest = posixpath.join(self._local_log, f"v{n:012d}.json")
-        try:
-            os.link(tmp, dest)
-        except FileExistsError:
-            os.unlink(tmp)
-            os.unlink(man_local)
-            raise SnapshotConflictError(
-                f"commit derived from v{parent} but v{n} already "
-                f"exists in {self.log_dir}; re-read and re-derive"
-            )
-        os.unlink(tmp)
-        return n
-
 
 def version_as_of(log, ts) -> int:
     """The LATEST version whose `committed_at` is <= `ts` — Iceberg /
     Delta `TIMESTAMP AS OF` resolution. `ts` is epoch seconds
     (int/float), a datetime (aware offsets honored; naive = UTC, the
-    engine-wide session zone), or an ISO-8601 string. Works on both
-    SnapshotLog and PureSnapshotLog (read accessors only), so the
-    batch data source resolves it in the planner worker too.
+    engine-wide session zone), or an ISO-8601 string. Read accessors
+    only, so a PureSnapshotLog serves it and the batch data source
+    resolves it in the planner worker too.
     Versions commit in order, so committed_at is non-decreasing and
     the scan is a tiny O(versions) metadata walk; commits within one
     second resolve to the latest of them (second-granularity
@@ -1480,8 +1345,7 @@ def _relpath_expr(spark: SparkSession, table_root: str, path_col):
     form-decoding) before anchoring on the qualified root — or
     encoded-name partitions silently fail to match their manifest
     relpath (the r7 input_file_name lesson)."""
-    fs, root_path, _ = _hadoop_fs(spark, table_root)
-    root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+    root_abs = _qualified_root(spark, table_root)
     decoded = F.url_decode(F.regexp_replace(path_col, r"\+", "%2B"))
     # anchor with plain string search, not regex (r14: the sf10
     # profile measured the old scheme-strip + \Q..\E regexp_extract
@@ -1506,12 +1370,10 @@ def _relpath_expr(spark: SparkSession, table_root: str, path_col):
 def _mor_cols(df: DataFrame) -> tuple[str, str]:
     """Unique (relpath, pos) helper column names that shadow no data
     column of `df`."""
-    rel, pos = "__mor_rel", "__mor_pos"
-    while rel in df.columns:
-        rel += "_"
-    while pos in df.columns:
-        pos += "_"
-    return rel, pos
+    return (
+        _unused_column("__mor_rel", df.columns),
+        _unused_column("__mor_pos", df.columns),
+    )
 
 
 def _anti_join_deletes(
@@ -6153,5 +6015,5 @@ def expire_snapshots(
                 ),
                 True,
             )
-        fs.delete(Path(log.log_dir, f"v{v:012d}.json"), False)
+        fs.delete(Path(log.log_dir, _version_name(v)), False)
     return {"expired": len(drop_vs), "deleted_files": deleted}

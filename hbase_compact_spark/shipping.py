@@ -21,7 +21,8 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED_APPS: set[str] = set()
+# application id -> path of the zip shipped to it
+_SHIPPED_APPS: dict[str, str] = {}
 # Concurrent driver threads (serve-path overlaps, the test session's
 # memo prebuild) may race this module: the pid-suffixed tmp name is
 # NOT unique across threads, so two packagers could truncate each
@@ -42,17 +43,19 @@ def _package_files() -> list[str]:
     return sorted(out)
 
 
-def ensure_package_on_executors(spark: SparkSession) -> None:
+def ensure_package_on_executors(spark: SparkSession) -> str:
+    """Ship the package zip to the session's executors (once per
+    application) and return the zip's local path."""
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
-        return
+        return _SHIPPED_APPS[app_id]
     with _SHIP_LOCK:
-        _ensure_locked(spark, app_id)
+        return _ensure_locked(spark, app_id)
 
 
-def _ensure_locked(spark: SparkSession, app_id: str) -> None:
+def _ensure_locked(spark: SparkSession, app_id: str) -> str:
     if app_id in _SHIPPED_APPS:  # raced another thread past the fast check
-        return
+        return _SHIPPED_APPS[app_id]
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     files = _package_files()
     # key the zip by CONTENT (path + mtime + size of every module),
@@ -77,4 +80,5 @@ def _ensure_locked(spark: SparkSession, app_id: str) -> None:
                 zf.write(full, rel)
         os.replace(tmp, zip_path)  # atomic: racers agree on content
     spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_APPS.add(app_id)
+    _SHIPPED_APPS[app_id] = zip_path
+    return zip_path

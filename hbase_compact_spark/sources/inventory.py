@@ -134,13 +134,12 @@ def file_inventory(spark: SparkSession, root: str, *, depth: tuple[str, ...] = (
     # same Hadoop FileSystem the listing uses, so file://, hostful
     # hdfs:// and relative roots all resolve identically.
     from hbase_compact_spark.compaction.executor import (
-        _hadoop_fs,
-        _uri_path,
+        URI_SCHEME_RE,
+        _qualified_root,
     )
 
-    fs, root_path, _ = _hadoop_fs(spark, root)
-    rootlit = _uri_path(str(fs.makeQualified(root_path))).rstrip("/") + "/"
-    stripped = F.regexp_replace("path", "^[a-z0-9]+:(//[^/]*)?", "")
+    rootlit = _qualified_root(spark, root) + "/"
+    stripped = F.regexp_replace("path", URI_SCHEME_RE, "")
     rel = F.when(
         stripped.startswith(rootlit),
         stripped.substr(F.lit(len(rootlit) + 1), F.length(stripped)),

@@ -38,8 +38,9 @@ SQL entry point.
 The planner worker has no py4j gateway and no SparkSession, but CAN
 import this package (the driver's sys.path propagates; foreign-cwd
 drivers are covered by the package zip `read_table` ships) — so
-unlike the self-contained streaming tail, planning here reuses
-snapshots.py verbatim instead of mirroring it.
+planning here reuses snapshots.py verbatim, like the streaming tail
+(streaming/table_tail.py), whose planner gets the same zip on its
+sys.path.
 """
 
 from __future__ import annotations
@@ -72,6 +73,7 @@ IN_PRUNE_MAX = 64
 
 
 def _local_path(root: str) -> str:
+    """Strip a `file:` URI scheme down to a filesystem path."""
     if root.startswith("file://"):
         return root[len("file://"):] or "/"
     if root.startswith("file:"):
@@ -309,9 +311,7 @@ class SnapshotTableReader(DataSourceReader):
         # exactly the entries that may kill its rows
         import pyarrow.parquet as pq
 
-        deletes_local = posixpath.join(
-            _local_path(self._root), "_snapshots", "deletes"
-        )
+        deletes_local = _local_path(log.deletes_dir)
         entry_touch: list[tuple[dict, set]] = []
         for name, _n in log.delete_files(v):
             if name.startswith(EQ_DELETE_PREFIX):

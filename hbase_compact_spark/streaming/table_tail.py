@@ -15,7 +15,9 @@ QHBaseCompact.java:102-133, applied to the read side).
 Scale design:
 - planning (initialOffset/latestOffset/partitions) touches snapshot
   METADATA only: version JSONs plus a column-pruned (relpath, size)
-  manifest read — no data file is opened on the driver;
+  manifest read through compaction.snapshots.PureSnapshotLog, the
+  same JVM-free reader the batch source (sources/snapshot_table.py)
+  plans with — no data file is opened on the driver;
 - one InputPartition per appended file; executors read their file
   directly through Arrow (`pyarrow.parquet` → RecordBatch), so a
   1000-file delta fans out over the cluster like any parquet scan;
@@ -40,9 +42,9 @@ with a `read_changes` + `from_version` resume pointer.
 
 from __future__ import annotations
 
-import json
 import os
 import posixpath
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -72,111 +74,18 @@ FORMAT_NAME = "snapshot_tail"
 # read_changes pointer.
 _CDC_REFUSE = frozenset({"delete", "merge", "rollback"})
 
-# Python data-source PLANNER workers run outside the driver process
-# and do not see sys.path additions or addPyFile shipments, so this
-# module is deliberately SELF-CONTAINED (stdlib + pyarrow + pyspark
-# only) and `tail_stream` registers it for cloudpickle BY-VALUE
-# serialization. That also means the row-changing op set is mirrored
-# here rather than imported from compaction.snapshots — a parity test
-# (tests/test_table_tail.py) pins the two frozensets equal.
-_ROW_CHANGING_OPS = frozenset(
-    {
-        "compact",
-        "delete",
-        "merge",
-        "mor_delete",
-        "mor_delete_eq",
-        "mor_upsert",
-        "rollback",
-    }
-)
+# Path of the package zip tail_stream ships to executors. Python
+# streaming-source PLANNER workers see neither the driver's sys.path
+# nor addPyFile shipments, so this module is pickled BY VALUE with the
+# data source, and the value set here before registration travels
+# with it: _engine_on_path puts the zip on the planner's sys.path
+# before the reader imports the snapshot-log code.
+_PACKAGE_ZIP: str | None = None
 
 
-def _local_path(root: str) -> str:
-    """Strip a file: URI scheme down to a filesystem path (same
-    local-path assumption as SnapshotLog._manifest_local; an
-    object-store deployment routes through a pyarrow filesystem)."""
-    if root.startswith("file://"):
-        return root[len("file://"):] or "/"
-    if root.startswith("file:"):
-        return root[len("file:"):]
-    return root
-
-
-class _TailLog:
-    """Pure-Python snapshot-log reader for the stream-planning side.
-
-    The DataSource planning hooks run in a Python worker without a
-    SparkSession, so this reads the same on-disk contract as
-    SnapshotLog (version JSONs + column-pruned manifest parquet) with
-    json/pyarrow only. Immutability of committed versions and
-    manifests makes the two readers trivially consistent."""
-
-    def __init__(self, table_root: str):
-        self.root = _local_path(table_root)
-        self.log_dir = posixpath.join(self.root, "_snapshots")
-        self.manifest_dir = posixpath.join(self.log_dir, "manifests")
-
-    def versions(self) -> list[int]:
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-
-    def latest(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def read(self, version: int) -> dict:
-        with open(
-            posixpath.join(self.log_dir, f"v{version:012d}.json")
-        ) as f:
-            return json.load(f)
-
-    def delete_files(self, version: int) -> list[tuple[str, int]]:
-        """[(entry name, n)] of the snapshot's pending MOR delete
-        entries (the version JSON's delete_files list); [] for
-        version 0 / a version that does not exist (the cursor floor
-        before the first commit)."""
-        if version <= 0:
-            return []
-        try:
-            snap = self.read(version)
-        except FileNotFoundError:
-            return []
-        return [(e[0], int(e[1])) for e in snap.get("delete_files") or []]
-
-    def files(self, version: int) -> list[tuple[str, int]]:
-        """(relpath, size) of a snapshot — the same column-pruned
-        manifest read SnapshotLog.files performs (names+sizes only on
-        the planner at any file count), self-contained for the
-        data-source worker. A zero-row manifest may be a Spark-written
-        directory with no part files at all (empty-table bootstrap)."""
-        import pyarrow.parquet as pq
-
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if not name:
-            return sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            )
-        path = posixpath.join(self.manifest_dir, name)
-        if os.path.isdir(path) and not any(
-            n.endswith(".parquet") for n in os.listdir(path)
-        ):
-            return []
-        tbl = pq.read_table(path, columns=["relpath", "size"])
-        return sorted(
-            zip(
-                tbl.column("relpath").to_pylist(),
-                (int(x) for x in tbl.column("size").to_pylist()),
-            )
-        )
+def _engine_on_path() -> None:
+    if _PACKAGE_ZIP and _PACKAGE_ZIP not in sys.path:
+        sys.path.insert(0, _PACKAGE_ZIP)
 
 
 class _TailFilePartition(InputPartition):
@@ -228,23 +137,6 @@ class _CdcDeletePartition(InputPartition):
         self.version = version
 
 
-def _path_partition_values(relpath: str) -> dict[str, str]:
-    """{column: raw value} from hive-style `k=v` dir components —
-    legacy hive layouts keep partition values ONLY in the path, so
-    the tail re-materializes them like the batch reader does. `_hp_`
-    spec dirs are layout (their source columns live inside the
-    files) and are skipped."""
-    from urllib.parse import unquote
-
-    out: dict[str, str] = {}
-    for comp in posixpath.dirname(relpath).split("/"):
-        if "=" in comp and not comp.startswith("_hp_"):
-            k, v = comp.split("=", 1)
-            if v != "__HIVE_DEFAULT_PARTITION__":
-                out[k] = unquote(v)
-    return out
-
-
 class SnapshotTailStreamReader(DataSourceStreamReader):
     """Micro-batch planner: offsets are {"version": N} = "served
     through snapshot N". Spark checkpoints them; restart resumes
@@ -259,13 +151,27 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         self._mode = options.get("mode", "append")
         if self._mode not in ("append", "cdc"):
             raise ValueError(f"snapshot_tail mode must be append|cdc, got {self._mode!r}")
-        self._log = _TailLog(self._root)
+        _engine_on_path()
+        from hbase_compact_spark.compaction.snapshots import (
+            CHANGES_SUBDIR,
+            PureSnapshotLog,
+        )
+        from hbase_compact_spark.sources.snapshot_table import _local_path
+
+        self._log = PureSnapshotLog(self._root)
+        self._local_root = _local_path(self._root)
+        self._deletes_dir = _local_path(self._log.deletes_dir)
+        self._changes_dir = posixpath.join(
+            _local_path(self._log.log_dir), CHANGES_SUBDIR
+        )
 
     # ------------------------------------------------------- offsets
     def initialOffset(self) -> dict:
         return {"version": self._from_version}
 
     def latestOffset(self) -> dict:
+        from hbase_compact_spark.compaction.snapshots import ROW_CHANGING_OPS
+
         latest = self._log.latest()
         if latest is None:
             return {"version": self._from_version}
@@ -278,7 +184,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         end = start
         served = 0
         refuse = (
-            _CDC_REFUSE if self._mode == "cdc" else _ROW_CHANGING_OPS
+            _CDC_REFUSE if self._mode == "cdc" else ROW_CHANGING_OPS
         )
         for v in range(start + 1, latest + 1):
             snap = self._log.read(v)
@@ -359,9 +265,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                     if relpath not in prev:
                         out.append(
                             _TailFilePartition(
-                                posixpath.join(
-                                    _local_path(self._root), relpath
-                                ),
+                                posixpath.join(self._local_root, relpath),
                                 relpath,
                                 v,
                             )
@@ -376,7 +280,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         artifact — planning is a directory listing, reading a plain
         Arrow scan; per-version cost is O(changed rows) exactly like
         the artifact itself."""
-        base = posixpath.join(self._log.log_dir, "changes", name)
+        base = posixpath.join(self._changes_dir, name)
         out: list[InputPartition] = []
         for side, ctype in (("inserts", "insert"), ("deletes", "delete")):
             d = posixpath.join(base, side)
@@ -401,13 +305,11 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         can mask rows that were logically dead already."""
         import pyarrow.parquet as pq
 
-        deletes_dir = posixpath.join(
-            self._log.log_dir, "deletes"
-        )
-        prev_names = {n for n, _ in self._log.delete_files(v - 1)}
+        deletes_dir = self._deletes_dir
+        prev_names = {n for n, _ in self._pending_deletes(v - 1)}
         new_names = [
             n
-            for n, _ in self._log.delete_files(v)
+            for n, _ in self._pending_deletes(v)
             if n not in prev_names
         ]
         if not new_names:
@@ -431,7 +333,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
             (n, _entry_files(n)) for n in sorted(prev_names)
         ]
         out: list[InputPartition] = []
-        root = _local_path(self._root)
+        root = self._local_root
         for name in new_names:
             kind = "eq" if name.startswith("e-") else "pos"
             entry_path = posixpath.join(deletes_dir, name)
@@ -456,6 +358,17 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                 )
         return out
 
+    def _pending_deletes(self, version: int) -> list[tuple[str, int]]:
+        """The version's pending MOR delete entries; [] for version 0
+        (the cursor floor before the first commit) and for a version
+        that no longer exists."""
+        if version <= 0:
+            return []
+        try:
+            return self._log.delete_files(version)
+        except FileNotFoundError:
+            return []
+
     def files_at(self, version: int) -> list[tuple[str, int]]:
         if version <= 0:
             return []
@@ -477,7 +390,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
 
             tbl = pq.read_table(partition.abs_path)
             yield from self._project(
-                tbl, {}, partition.version, partition.change_type
+                tbl, "", partition.version, partition.change_type
             )
             return
         if isinstance(partition, _CdcDeletePartition):
@@ -489,21 +402,23 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
 
         tbl = pq.read_table(partition.abs_path)
         yield from self._project(
-            tbl,
-            _path_partition_values(partition.relpath),
-            partition.version,
-            "insert",
+            tbl, partition.relpath, partition.version, "insert"
         )
 
-    def _project(self, tbl, pathvals, version: int, change_type: str):
+    def _project(self, tbl, relpath: str, version: int, change_type: str):
         """Arrow table -> RecordBatches in the declared tail schema:
-        data columns cast, hive path values filled, evolution-missing
-        columns NULL, plus the _tail_version (and, in cdc mode, the
-        _change_type) attribution columns."""
+        data columns cast, hive path values of `relpath` filled ("" =
+        none), evolution-missing columns NULL, plus the _tail_version
+        (and, in cdc mode, the _change_type) attribution columns."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from hbase_compact_spark.sources.snapshot_table import (
+            _path_partition_values,
+        )
+
         target = to_arrow_schema(self._schema)
+        pathvals = _path_partition_values(relpath)
         n = tbl.num_rows
         cols = []
         for field in target:
@@ -590,12 +505,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                     )
                     alive &= ~_matches(pk)
             sel = tbl.filter(pa.array(_matches(keys) & alive))
-        yield from self._project(
-            sel,
-            _path_partition_values(p.relpath),
-            p.version,
-            "delete",
-        )
+        yield from self._project(sel, p.relpath, p.version, "delete")
 
     def commit(self, end: dict) -> None:
         # the durable cursor lives in Spark's checkpoint; this only
@@ -680,21 +590,20 @@ def tail_stream(
 ) -> DataFrame:
     """The table's append tail as a streaming DataFrame. Registers
     the data source on the session (idempotent) and wires the
-    log-derived schema. The planner and reader workers deserialize
-    this module by reference, so the package ships to them first
-    (same contract as every Pandas-UDF operator)."""
-    import sys
+    log-derived schema. Executors get the package zip like every
+    Pandas-UDF operator; the stream planner worker gets its path
+    through _PACKAGE_ZIP."""
+    global _PACKAGE_ZIP
 
     from pyspark import cloudpickle
 
-    # planner workers cannot import this package (no sys.path /
-    # addPyFile visibility), so the whole module ships BY VALUE inside
-    # the pickled DataSource; executors additionally get the package
-    # zip for the Arrow read path (same contract as Pandas-UDF ops)
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     from hbase_compact_spark.shipping import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
+    # the planner worker cannot import this package until the zip is
+    # on its sys.path, so the module ships BY VALUE inside the pickled
+    # DataSource — registration pickles it, so set the path first
+    _PACKAGE_ZIP = ensure_package_on_executors(spark)
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SnapshotTailDataSource)
     reader = (
         spark.readStream.format(FORMAT_NAME)

@@ -19,7 +19,10 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import sys
+import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -404,3 +407,62 @@ def test_merge_full_rebases_across_disjoint_append(
     assert rows[10] == 111 and rows[11] == 222
     assert rows[500] == 1000  # the appendee carried through the rebase
     assert got.count() == 41
+
+
+
+def test_concurrent_claims_land_exactly_one_version(spark, tmp_path):
+    """Threads racing for the SAME parent, half through
+    SnapshotLog.commit and half through
+    PureSnapshotLog.commit_manifest_table, share one commit point:
+    each round lands exactly one version, every loser raises
+    SnapshotConflictError, and losers leave no tmp JSON and no
+    manifest that no version references."""
+    root = _tbl(spark, tmp_path)
+    log = SnapshotLog(spark, root)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for rnd in range(4):
+            _race_one_round(spark, root, log, f"race{rnd}", n_threads=8)
+    finally:
+        sys.setswitchinterval(switch)
+
+    log_dir = os.path.join(root, S.SNAPSHOT_DIR)
+    assert not glob.glob(os.path.join(log_dir, "_tmp-*.json"))
+    referenced = {log.read(v)["manifest"] for v in log.versions()}
+    on_disk = {
+        n
+        for n in os.listdir(os.path.join(log_dir, S.MANIFEST_SUBDIR))
+        if n.startswith("m-")
+    }
+    assert on_disk == referenced
+
+
+def _race_one_round(spark, root, log, op, n_threads):
+    """n_threads committers, alternating SnapshotLog and
+    PureSnapshotLog, all derived from the current latest version,
+    released together at a barrier."""
+    parent = log.latest()
+    files = log.files(parent)
+    committers = [
+        SnapshotLog(spark, root) if i % 2 else S.PureSnapshotLog(root)
+        for i in range(n_threads)
+    ]
+    tbl = committers[0].manifest_table(parent)
+    barrier = threading.Barrier(n_threads, timeout=60)
+
+    def claim(c):
+        barrier.wait()
+        try:
+            if isinstance(c, SnapshotLog):
+                return c.commit(files, op=op, parent=parent)
+            return c.commit_manifest_table(tbl, op=op, parent=parent)
+        except SnapshotConflictError as exc:
+            return exc
+
+    with ThreadPoolExecutor(n_threads) as pool:
+        outcomes = list(pool.map(claim, committers, timeout=120))
+    # every non-winner came back as a SnapshotConflictError (any other
+    # exception would have propagated out of pool.map)
+    assert [o for o in outcomes if isinstance(o, int)] == [parent + 1]
+    assert log.versions()[-2:] == [parent, parent + 1]

@@ -126,7 +126,7 @@ def test_pure_scan_plan_parity(spark, table):
     root, log = table
     for preds in ({"k": (100, 450)}, {"k": 137}, {"g": (8, 9)}):
         assert scan_plan(None, root, preds) == scan_plan(spark, root, preds)
-    # PureSnapshotLog mirrors SnapshotLog's read accessors
+    # SnapshotLog inherits PureSnapshotLog's read accessors
     pure = PureSnapshotLog(root)
     assert pure.versions() == log.versions()
     assert pure.files() == log.files()

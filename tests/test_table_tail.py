@@ -2,9 +2,10 @@
 VERDICT r11 task 1): version-offset micro-batch source.
 
 Pins: per-version delivery and O(delta) planning, checkpoint restart
-continuation with no replay, refusal to cross rewrite commits, the
-expired-cursor guard, and the mirrored row-changing-op set staying in
-lockstep with compaction.snapshots."""
+continuation with no replay, refusal to cross rewrite commits, and
+the expired-cursor guard. Planning reads the log through
+compaction.snapshots.PureSnapshotLog; the foreign-cwd import of it
+by the stream planner worker is pinned in tests/test_foreign_cwd.py."""
 
 from __future__ import annotations
 
@@ -58,14 +59,6 @@ def _run_tail(spark, root, ckpt, out_dir, **kw):
     assert q.awaitTermination(300), "tail run did not finish in 300 s"
     after = set(os.listdir(out_dir)) if os.path.isdir(out_dir) else set()
     return len(after - before)
-
-
-def test_row_changing_ops_mirror_in_lockstep():
-    """table_tail is self-contained for the data-source worker, so it
-    mirrors ROW_CHANGING_OPS instead of importing it — the two sets
-    must never diverge or the tail would cross (or spuriously refuse)
-    an op class."""
-    assert T._ROW_CHANGING_OPS == S.ROW_CHANGING_OPS
 
 
 def test_planning_is_per_version_file_delta(spark, tmp_path):
