@@ -32,6 +32,7 @@ import hashlib
 import os
 import posixpath
 import re
+import shutil
 import time
 import uuid
 from typing import NamedTuple
@@ -89,6 +90,21 @@ _MANIFEST_CACHE_LOCK = _threading.Lock()
 MANIFEST_SCHEMA_DDL = (
     "relpath string, size long, stats string, blooms string"
 )
+
+# a child manifest that keeps every parent file hard-links the
+# parent's parts and adds one; once MANIFEST_MERGE_PARTS of them are
+# smaller than MANIFEST_PART_BYTES, the child merges those into one
+# part instead (Iceberg's commit.manifest.min-count-to-merge default
+# and manifest target size), so a stream of upserts keeps the part
+# count at most (manifest bytes / MANIFEST_PART_BYTES) + 100
+MANIFEST_MERGE_PARTS = 100
+MANIFEST_PART_BYTES = 8 << 20
+
+# default bloom sizing of every manifest annotation (annotate_blooms,
+# and the added files of a child manifest): target false-positive
+# rate and the per-file bitset cap
+BLOOM_FPP = 0.01
+BLOOM_MAX_BITS = 1 << 16
 
 # Hidden-partitioning layout marker (partition-spec evolution): files
 # written under the current spec live in `_hp_<col>=<value>` dirs.
@@ -489,6 +505,21 @@ def _path_value_disjoint(raw: str, lo, hi) -> bool:
     return False
 
 
+def _manifest_schema():
+    """pyarrow schema of the canonical manifest shape
+    (MANIFEST_SCHEMA_DDL)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("relpath", pa.string()),
+            ("size", pa.int64()),
+            ("stats", pa.string()),
+            ("blooms", pa.string()),
+        ]
+    )
+
+
 def _read_manifest_table(local_path: str, columns=None):
     """pyarrow table of a manifest file/dir. A ZERO-ROW manifest
     (bootstrap of an empty table) may have been written by Spark as a
@@ -502,14 +533,7 @@ def _read_manifest_table(local_path: str, columns=None):
     if _os.path.isdir(local_path) and not any(
         n.endswith(".parquet") for n in _os.listdir(local_path)
     ):
-        empty = pa.table(
-            {
-                "relpath": pa.array([], pa.string()),
-                "size": pa.array([], pa.int64()),
-                "stats": pa.array([], pa.string()),
-                "blooms": pa.array([], pa.string()),
-            }
-        )
+        empty = _manifest_schema().empty_table()
         return empty.select(columns) if columns else empty
     return pq.read_table(local_path, columns=columns)
 
@@ -711,6 +735,11 @@ class PureSnapshotLog:
     def deletes_dir(self) -> str:
         return posixpath.join(self.log_dir, DELETES_SUBDIR)
 
+    @property
+    def _deletes_local(self) -> str:
+        """Local filesystem path of `deletes_dir`."""
+        return posixpath.join(self._local_log, DELETES_SUBDIR)
+
     def delete_files(self, version: int | None = None) -> list[tuple[str, int]]:
         """[(name, n)] of the merge-on-read delete entries applying to
         a snapshot (Iceberg v2), kind-tagged by name prefix: a `d-`
@@ -813,6 +842,17 @@ class PureSnapshotLog:
         )
 
     # --------------------------------------------------------- writes
+    def _write_manifest_table(self, tbl) -> str:
+        """Write `tbl` (pyarrow, manifest shape) as one fresh immutable
+        manifest parquet and return its name."""
+        import pyarrow.parquet as pq
+
+        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
+        man_local = self._manifest_local(name)
+        os.makedirs(posixpath.dirname(man_local), exist_ok=True)
+        pq.write_table(tbl, man_local)
+        return name
+
     def _claim_version(self, n: int, payload: dict) -> bool:
         """Publish `payload` as version n iff no version n exists: the
         JSON is written complete under a tmp name, then hard-linked
@@ -864,12 +904,7 @@ class PureSnapshotLog:
         its pending MOR delete entries carry unless the caller
         replaced the files they scope (carry_delete_files=False — the
         overwrite path)."""
-        import pyarrow.parquet as pq
-
-        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
-        man_local = self._manifest_local(name)
-        os.makedirs(posixpath.dirname(man_local), exist_ok=True)
-        pq.write_table(tbl, man_local)
+        name = self._write_manifest_table(tbl)
         payload = {
             "op": op,
             "committed_at": int(time.time()),
@@ -893,7 +928,7 @@ class PureSnapshotLog:
         payload["version"] = n
         payload["parent"] = parent if parent else None
         if not self._claim_version(n, payload):
-            os.unlink(man_local)
+            os.unlink(self._manifest_local(name))
             raise SnapshotConflictError(
                 f"commit derived from v{parent} but v{n} already "
                 f"exists in {self.log_dir}; re-read and re-derive"
@@ -1032,15 +1067,9 @@ class SnapshotLog(PureSnapshotLog):
         passes at scale) write a DataFrame in MANIFEST_SCHEMA_DDL shape
         under `manifest_dir/<m-uuid>` instead and pass that name to
         commit() — the payload then never visits the driver."""
-        import pyarrow.parquet as pq
-
-        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
-        self._fs.mkdirs(self._Path(self.manifest_dir))
-        pq.write_table(
-            _manifest_arrow(files, stats or {}, blooms or {}),
-            self._manifest_local(name),
+        return self._write_manifest_table(
+            _manifest_arrow(files, stats or {}, blooms or {})
         )
-        return name
 
     def commit_append(
         self, added: list[tuple[str, int]], op: str, parent: int
@@ -1403,6 +1432,42 @@ def _anti_join_deletes(
     return df.join(dels, on=[rel_col, pos_col], how="left_anti")
 
 
+def _parquet_parts(local_dir: str) -> list[str]:
+    """Sorted local paths of the parquet part files in a dir, skipping
+    the `_`/`.`-prefixed markers and checksums Spark writes beside them
+    (the names pyarrow's dataset reader also ignores)."""
+    return sorted(
+        posixpath.join(local_dir, n)
+        for n in os.listdir(local_dir)
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
+
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_row_schema(path: str):
+    """The Spark row schema recorded in the footer of the first part
+    file under `path` (a dir of Spark-written parquet), or None when the
+    path is not local or the writer recorded none — the caller then
+    lets Spark infer, which costs one job per read."""
+    import json as _json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    local = _local_meta_path(path)
+    try:
+        parts = _parquet_parts(local) if local is not None else []
+    except FileNotFoundError:
+        return None  # Spark's own read raises the path error
+    if not parts:
+        return None
+    raw = (pq.read_metadata(parts[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+    return StructType.fromJson(_json.loads(raw)) if raw else None
+
+
 def _apply_eq_deletes(
     spark: SparkSession,
     df: DataFrame,
@@ -1429,7 +1494,12 @@ def _apply_eq_deletes(
         taken = set(df.columns)
         km = _uniq("__eq_k", taken)
         sm = _uniq("__eq_s", taken)
-        keys = spark.read.parquet(keys_path)
+        # declared from the key file's footer: no inference job per entry
+        key_schema = _spark_row_schema(keys_path)
+        reader = spark.read
+        if key_schema is not None:
+            reader = reader.schema(key_schema)
+        keys = reader.parquet(keys_path)
         key_cols = list(keys.columns)
         keys = keys.withColumn(km, F.lit(True))
         if n_keys <= MOR_BROADCAST_ROWS:
@@ -2409,8 +2479,8 @@ def _annotate_df(
     source_df: DataFrame,
     stat_cols,
     bloom_cols,
-    fpp: float = 0.01,
-    max_bits: int = 1 << 16,
+    fpp: float = BLOOM_FPP,
+    max_bits: int = BLOOM_MAX_BITS,
     n_files_hint: int | None = None,
 ) -> DataFrame:
     """Manifest-shaped DataFrame with per-file stats/blooms computed
@@ -2462,8 +2532,8 @@ def _write_manifest_distributed(
     source_df: DataFrame,
     stat_cols,
     bloom_cols,
-    fpp: float = 0.01,
-    max_bits: int = 1 << 16,
+    fpp: float = BLOOM_FPP,
+    max_bits: int = BLOOM_MAX_BITS,
     n_files_hint: int | None = None,
 ) -> str:
     """Write a manifest from `source_df` (MANIFEST_SCHEMA_DDL shape)
@@ -2738,8 +2808,8 @@ def annotate_blooms(
     spark: SparkSession,
     table_root: str,
     cols: list[str],
-    fpp: float = 0.01,
-    max_bits: int = 1 << 16,
+    fpp: float = BLOOM_FPP,
+    max_bits: int = BLOOM_MAX_BITS,
     version: int | None = None,
 ) -> int:
     """Commit a snapshot carrying per-file bloom filters for the given
@@ -3580,11 +3650,12 @@ def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
     """(stat_cols, bloom_cols) the parent snapshot's manifest carries.
     Two-stage O(1)-ish discovery: parquet COLUMN STATISTICS first — a
     payload column whose every row group is all-NULL provably carries
-    nothing, at zero data read — then an early-exit batch scan only
-    over the columns the metadata says might hold something, stopping
-    as soon as each has yielded its column set. A stats-only manifest
-    (the common case) therefore never scans the bloom payloads at
-    all."""
+    nothing, at zero data read — then an early-exit streaming scan
+    only over the columns the metadata says might hold something,
+    stopping as soon as each has yielded its column set. A stats-only
+    manifest (the common case) therefore never scans the bloom
+    payloads at all, and a bloom-annotated one reads a few pages of
+    them, not the manifest."""
     import json as _json
     import os as _os
 
@@ -3602,14 +3673,7 @@ def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
     import pyarrow.parquet as pq
 
     local = log._manifest_local(name)
-    if _os.path.isdir(local):
-        parts = sorted(
-            _os.path.join(local, n)
-            for n in _os.listdir(local)
-            if n.endswith(".parquet")
-        )
-    else:
-        parts = [local]
+    parts = _parquet_parts(local) if _os.path.isdir(local) else [local]
     if not parts:
         return [], []  # zero-row manifest: no metadata columns
 
@@ -3639,11 +3703,16 @@ def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
     if not want:
         return [], []
 
-    import pyarrow.dataset as ds
+    def _batches():
+        # buffered page-by-page reads: the early exit then costs a few
+        # pages, not the decoded row group (a bloom payload column is
+        # ~11 KB/file, so one row group can hold gigabytes)
+        for part in parts:
+            pf = pq.ParquetFile(part, buffer_size=1 << 20, pre_buffer=False)
+            yield from pf.iter_batches(batch_size=64, columns=want)
 
-    dataset = ds.dataset(local, format="parquet")
     pending = set(want)
-    for batch in dataset.to_batches(columns=want, batch_size=1024):
+    for batch in _batches():
         cols = {nm: batch.column(nm).to_pylist() for nm in want}
         for row_i in range(batch.num_rows):
             if "stats" in pending:
@@ -3672,46 +3741,123 @@ def _carried_manifest(
     spark: SparkSession,
     log: SnapshotLog,
     base_version: int,
-    keep: list[tuple[str, int]],
+    keep: list[tuple[str, int]] | None,
     added: list[tuple[str, int]],
 ) -> str:
-    """Child manifest for a rewrite (compact/delete/merge), built
-    WITHOUT driver-side metadata: kept files' manifest rows (stats +
-    bloom payloads intact) are filtered from the parent manifest on
-    executors; added files get a footer/bloom pass for the SAME
-    columns the parent tracks, also on executors; the union writes
-    straight to the new manifest. The driver holds only names+sizes —
-    the bounded-delta shape of the file list itself."""
-    keep_rels = [p for p, _ in keep]
-    parent_df = log.manifest_df(base_version)
-    if keep_rels:
-        keep_df = parent_df.join(
-            spark.createDataFrame(
-                [(p,) for p in keep_rels], "relpath string"
-            ),
-            "relpath",
-            "left_semi",
+    """Child manifest of a commit: the parent's rows for the kept files
+    (stats + bloom payloads intact) plus one row per added file,
+    annotated for the SAME stat and bloom columns the parent tracks.
+    Written as a manifest directory (readers take file and directory
+    manifests alike) of two kinds of part:
+
+    - the parent rows. `keep=None` keeps every parent file (the MOR
+      upsert): the parent's part files are hard-linked in — manifests
+      are immutable, so versions may share parts — and nothing is
+      parsed, O(parent parts) filesystem calls at any file count. A
+      `keep` list (compact/delete/merge) filters the parent manifest
+      on executors (left-semi join) and writes the kept rows. Once
+      MANIFEST_MERGE_PARTS parent parts are small (under
+      MANIFEST_PART_BYTES), the keep=None child merges those into one
+      part on the driver, streamed a part at a time, and links the
+      rest. The part count stays bounded, and a merge, which reads
+      only small parts, comes once per ~100 upserts.
+    - one pyarrow part for the added files, annotated by `_meta_row`
+      for the parent's columns. Footer stats are metadata, read on
+      the driver (one footer per added file). A bloom bitset reads the
+      column's data pages, so when the parent tracks blooms they are
+      built on executors (`_annotate_df`, one Spark job) and only the
+      added files' bitsets come back.
+
+    Parent payloads never visit the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = f"m-{uuid.uuid4().hex[:12]}"
+    dest = log._manifest_local(name)
+    parent = log.read(base_version).get("manifest")
+    src = log._manifest_local(parent) if parent else None
+    parent_parts = (
+        (_parquet_parts(src) if os.path.isdir(src) else [src]) if src else []
+    )
+    try:
+        if keep is None:
+            os.makedirs(dest)
+            if src is None:  # legacy inline snapshot: encode it once
+                pq.write_table(
+                    log.manifest_table(base_version),
+                    posixpath.join(dest, "parent.parquet"),
+                )
+            small = [
+                p for p in parent_parts
+                if os.path.getsize(p) < MANIFEST_PART_BYTES
+            ]
+            if len(small) < MANIFEST_MERGE_PARTS:
+                small = []
+            for part in set(parent_parts) - set(small):
+                os.link(part, posixpath.join(dest, posixpath.basename(part)))
+            if small:  # streamed one part at a time: ≤ 8 MB in memory
+                merged = posixpath.join(
+                    dest, f"merged-{uuid.uuid4().hex[:12]}.parquet"
+                )
+                with pq.ParquetWriter(merged, _manifest_schema()) as w:
+                    for part in small:
+                        w.write_table(_read_manifest_table(part).cast(
+                            _manifest_schema()
+                        ))
+        elif keep:
+            log.manifest_df(base_version).join(
+                spark.createDataFrame(
+                    [(p,) for p, _ in keep], "relpath string"
+                ),
+                "relpath",
+                "left_semi",
+            ).write.parquet(posixpath.join(log.manifest_dir, name))
+        else:
+            os.makedirs(dest)
+        stat_cols, bloom_cols = (
+            _parent_meta_cols(log, base_version) if added else ([], [])
         )
-    else:
-        keep_df = parent_df.limit(0)
-    stat_cols, bloom_cols = _parent_meta_cols(log, base_version)
-    added_src = spark.createDataFrame(
-        [(p, int(s), None, None) for p, s in added],
-        MANIFEST_SCHEMA_DDL,
-    )
-    added_df = _annotate_df(
-        log,
-        added_src,
-        stat_cols=stat_cols if stat_cols else False,
-        bloom_cols=bloom_cols or None,
-        n_files_hint=max(1, len(added)),
-    )
-    return _write_manifest_distributed(
-        log,
-        keep_df.unionByName(added_df),
-        stat_cols=False,
-        bloom_cols=None,
-    )
+        root_local = _uri_path(log.table_root)
+        stats = [
+            _meta_row(
+                root_local, rel, None, None, stat_cols or False, None,
+                BLOOM_FPP, BLOOM_MAX_BITS,
+            )[0]
+            for rel, _ in added
+        ]
+        blooms = [None] * len(added)
+        if bloom_cols:
+            built = dict(
+                _annotate_df(
+                    log,
+                    spark.createDataFrame(
+                        [(p, int(sz), None, None) for p, sz in added],
+                        MANIFEST_SCHEMA_DDL,
+                    ),
+                    stat_cols=False,
+                    bloom_cols=bloom_cols,
+                    n_files_hint=len(added),
+                )
+                .select("relpath", "blooms")
+                .collect()
+            )
+            blooms = [built[p] for p, _ in added]
+        pq.write_table(
+            pa.table(
+                [
+                    [p for p, _ in added],
+                    [int(sz) for _, sz in added],
+                    stats,
+                    blooms,
+                ],
+                schema=_manifest_schema(),
+            ),
+            posixpath.join(dest, f"added-{uuid.uuid4().hex[:12]}.parquet"),
+        )
+    except BaseException:
+        shutil.rmtree(dest, ignore_errors=True)
+        raise
+    return name
 
 
 def _partition_cols_of(log: SnapshotLog, version: int) -> list[str]:
@@ -3876,12 +4022,13 @@ def _retire_delete_entries(
     rewrite touched none of its scope, rewritten into a fresh `e-` dir
     (same keys, shrunk scope) when it touched some, dropped when it
     consumed all of it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     entries = log.delete_files(base_version)
     if not entries:
         return None
-    kept_df = spark.createDataFrame(
-        [(p,) for p in kept_relpaths], "relpath string"
-    )
     new_list: list[list] = []
     pos_paths = [
         posixpath.join(log.deletes_dir, n)
@@ -3889,67 +4036,113 @@ def _retire_delete_entries(
         if not n.startswith(EQ_DELETE_PREFIX)
     ]
     if pos_paths:
+        kept_df = spark.createDataFrame(
+            [(p,) for p in kept_relpaths], "relpath string"
+        )
         surviving = spark.read.parquet(*pos_paths).join(
             F.broadcast(kept_df), "relpath", "left_semi"
         )
         name, n = _write_delete_file(spark, log, surviving)
         if n:
             new_list.append([name, n])
+    kept = pa.array(list(kept_relpaths), pa.string())
     for name, n_keys in entries:
         if not name.startswith(EQ_DELETE_PREFIX):
             continue
-        old_scope = spark.read.parquet(
-            posixpath.join(log.deletes_dir, name, "scope")
-        )
-        new_scope = old_scope.join(
-            F.broadcast(kept_df), "relpath", "left_semi"
-        )
-        n_new = new_scope.count()
-        if n_new == 0:
+        entry = posixpath.join(log._deletes_local, name)
+        old_scope = pq.read_table(
+            posixpath.join(entry, "scope"), columns=["relpath"]
+        ).column("relpath")
+        new_scope = old_scope.filter(pc.is_in(old_scope, value_set=kept))
+        if len(new_scope) == 0:
             continue  # every scoped file rewritten: entry fully applied
-        if n_new == old_scope.count():
+        if len(new_scope) == len(old_scope):
             new_list.append([name, n_keys])  # scope untouched: carry
             continue
-        keys_df = spark.read.parquet(
-            posixpath.join(log.deletes_dir, name, "keys")
+        # same keys, shrunk scope: the key count carries
+        new_list.append(
+            [_write_eq_delete_dir(log, entry, new_scope.to_pylist()), n_keys]
         )
-        nm, nk = _write_eq_delete_dir(spark, log, keys_df, new_scope)
-        new_list.append([nm, nk])
     return {"delete_files": new_list}
 
 
-def _write_eq_delete_dir(
-    spark: SparkSession,
-    log: SnapshotLog,
-    keys_df: DataFrame,
-    scope_df: DataFrame,
-) -> tuple[str, int]:
-    """Land an equality-delete entry as ONE immutable `e-<uuid>/` dir
-    (keys/ parquet = the key rows, scope/ parquet = the in-scope data
-    relpaths) under `_snapshots/deletes/` — tmp-write + rename, the
-    manifests' publication discipline. Returns (name, n_keys)."""
-    fs, Path = log._fs, log._Path
-    fs.mkdirs(Path(log.deletes_dir))
-    tmp = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
-    keys_df.dropDuplicates().repartition(1).write.mode("overwrite").parquet(
-        posixpath.join(tmp, "keys")
-    )
+def _land_keys(
+    spark: SparkSession, log: SnapshotLog, keys_df: DataFrame
+) -> tuple[str, int, int]:
+    """Land the DISTINCT key rows of `keys_df` ONCE, as one parquet
+    file under a fresh `_tmp-<uuid>/keys/` staging dir in
+    `_snapshots/deletes/` — an equality entry's only Spark work. One
+    aggregate does all of it: `groupBy(keys)` deduplicates (NULL keys
+    count as equal, as DISTINCT does), and an observation on it yields
+    the source row count (sum of the group counts) and the distinct
+    count (the number of groups), so a caller proves key uniqueness
+    without a second job. Returns (local staging dir, n_rows,
+    n_distinct); every commit attempt publishes its entry from the
+    staging dir (_write_eq_delete_dir), and the caller removes it once
+    the commit settled."""
+    from pyspark.sql import Observation
+
+    cols = list(keys_df.columns)
+    per_key = _unused_column("__n", cols)
+    obs = Observation()
+    tag = f"_tmp-{uuid.uuid4().hex[:10]}"
     (
-        scope_df.select(F.col("relpath").cast("string"))
-        .dropDuplicates()
-        .repartition(1)
-        .sortWithinPartitions("relpath")
-        .write.mode("overwrite")
-        .parquet(posixpath.join(tmp, "scope"))
-    )
-    n = spark.read.parquet(posixpath.join(tmp, "keys")).count()
-    name = f"{EQ_DELETE_PREFIX}{uuid.uuid4().hex[:12]}"
-    if not fs.rename(Path(tmp), Path(log.deletes_dir, name)):
-        _rm(spark, tmp)
-        raise RuntimeError(
-            f"could not publish equality-delete dir under {log.deletes_dir}"
+        keys_df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias(per_key))
+        .observe(
+            obs,
+            F.sum(per_key).alias("rows"),
+            F.count(F.lit(1)).alias("distinct"),
         )
-    return name, n
+        .select(*cols)
+        .coalesce(1)  # one key file, no second shuffle
+        .write.parquet(posixpath.join(log.deletes_dir, tag, "keys"))
+    )
+    counts = obs.get
+    return (
+        posixpath.join(log._deletes_local, tag),
+        int(counts["rows"] or 0),
+        int(counts["distinct"]),
+    )
+
+
+def _write_eq_delete_dir(
+    log: SnapshotLog,
+    keys_from: str,
+    scope_relpaths: list[str],
+) -> str:
+    """Publish an equality-delete entry as ONE immutable `e-<uuid>/`
+    dir under `_snapshots/deletes/`, without a Spark job: keys/ holds
+    hard links to the key files under `keys_from/keys/` (a _land_keys
+    staging dir, or an older entry whose keys travel whole — key files
+    are immutable, so entries may share them), and scope/ holds the
+    in-scope data relpaths, sorted and deduplicated, written with
+    pq.write_table. Every caller holds the scope on the driver already.
+    tmp-dir + rename, the manifests' publication discipline. Returns
+    the entry name; every caller already knows its key count. Local
+    paths only, the snapshot log's contract."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = posixpath.join(log._deletes_local, f"_tmp-{uuid.uuid4().hex[:10]}")
+    name = f"{EQ_DELETE_PREFIX}{uuid.uuid4().hex[:12]}"
+    try:
+        os.makedirs(posixpath.join(tmp, "keys"))
+        os.makedirs(posixpath.join(tmp, "scope"))
+        key_parts = _parquet_parts(posixpath.join(keys_from, "keys"))
+        for part in key_parts:
+            os.link(part, posixpath.join(tmp, "keys", posixpath.basename(part)))
+        pq.write_table(
+            pa.table(
+                {"relpath": pa.array(sorted(set(scope_relpaths)), pa.string())}
+            ),
+            posixpath.join(tmp, "scope", "part-00000.parquet"),
+        )
+        os.rename(tmp, posixpath.join(log._deletes_local, name))
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return name
 
 
 def _mor_affected_relpaths(
@@ -4394,7 +4587,8 @@ def snapshot_delete_by_key(
                 f"key columns {missing} not in the table schema "
                 f"(have: {sorted(have)})"
             )
-    if not relpaths:
+
+    def noop() -> dict:
         return {
             "version": base_version,
             "deleted_keys": 0,
@@ -4402,70 +4596,71 @@ def snapshot_delete_by_key(
             "scanned_files": 0,
             "delete_files": len(log.delete_files(base_version)),
         }
-    # optimistic retry: the whole commit is metadata (scope probe +
-    # key rows), so losing the race re-derives the scope against the
-    # NEW latest — a concurrent compact's rewritten file names and a
-    # concurrent append's fresh files (which, having committed FIRST,
-    # precede this delete and so belong in its scope) are both picked
-    # up by the re-probe. A caller-pinned version surfaces the
-    # conflict instead: the pinned state is gone.
-    for _ in range(COMMIT_REBASE_RETRIES + 1):
-        scope_rels = _eq_scope(
-            spark, log, base_version, key_cols, keys, relpaths
-        )
-        if not scope_rels:
-            # stats/blooms PROVE no live file can hold any key: no-op
-            return {
-                "version": base_version,
-                "deleted_keys": 0,
-                "rewritten_files": 0,
-                "scanned_files": 0,
-                "delete_files": len(log.delete_files(base_version)),
-            }
-        scope_df = spark.createDataFrame(
-            [(p,) for p in scope_rels], "relpath string"
-        )
-        name, n_keys = _write_eq_delete_dir(spark, log, keys, scope_df)
+
+    if not relpaths:
+        return noop()
+    staging, _, n_keys = _land_keys(spark, log, keys)
+    name = None  # this attempt's e- dir
+    claimed = False  # as in snapshot_upsert_mor
+    try:
         if n_keys == 0:
-            _rm(spark, posixpath.join(log.deletes_dir, name))
+            return noop()
+        # optimistic retry: after the key write everything is metadata
+        # (scope probe + scope list), so losing the race re-derives the
+        # scope against the NEW latest — a concurrent compact's
+        # rewritten file names and a concurrent append's fresh files
+        # (which, having committed FIRST, precede this delete and so
+        # belong in its scope) are both picked up by the re-probe. A
+        # caller-pinned version surfaces the conflict instead: the
+        # pinned state is gone.
+        for _ in range(COMMIT_REBASE_RETRIES + 1):
+            scope_rels = _eq_scope(
+                log, base_version, staging, n_keys, key_cols, relpaths
+            )
+            if not scope_rels:
+                # stats/blooms PROVE no live file can hold any key: no-op
+                return noop()
+            name = _write_eq_delete_dir(log, staging, scope_rels)
+            new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
+            new_list.append([name, n_keys])
+            manifest = log.copy_manifest(base_version)
+            if manifest is None:  # legacy inline snapshot: re-encode once
+                res = log._resolve(base_version)
+                manifest = log.write_manifest(
+                    res["files"], res["stats"], res["blooms"]
+                )
+            claimed = True
+            try:
+                v = log.commit(
+                    None,
+                    op="mor_delete_eq",
+                    parent=base_version,
+                    schema=log.read(base_version).get("schema"),
+                    manifest=manifest,
+                    extra={"delete_files": new_list},
+                )
+            except SnapshotConflictError:
+                claimed = False
+                shutil.rmtree(posixpath.join(log._deletes_local, name))
+                name = None
+                if version is not None:
+                    raise
+                base_version = log.latest()
+                relpaths = [p for p, _ in log.files(base_version)]
+                continue
             return {
-                "version": base_version,
-                "deleted_keys": 0,
+                "version": v,
+                "deleted_keys": n_keys,
                 "rewritten_files": 0,
                 "scanned_files": 0,
-                "delete_files": len(log.delete_files(base_version)),
+                "delete_files": len(new_list),
             }
-        new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
-        new_list.append([name, n_keys])
-        manifest = log.copy_manifest(base_version)
-        if manifest is None:  # legacy inline snapshot: re-encode once
-            res = log._resolve(base_version)
-            manifest = log.write_manifest(
-                res["files"], res["stats"], res["blooms"]
+    finally:
+        if name is not None and not claimed:
+            shutil.rmtree(
+                posixpath.join(log._deletes_local, name), ignore_errors=True
             )
-        try:
-            v = log.commit(
-                None,
-                op="mor_delete_eq",
-                parent=base_version,
-                schema=log.read(base_version).get("schema"),
-                manifest=manifest,
-                extra={"delete_files": new_list},
-            )
-        except SnapshotConflictError:
-            _rm(spark, posixpath.join(log.deletes_dir, name))
-            if version is not None:
-                raise
-            base_version = log.latest()
-            relpaths = [p for p, _ in log.files(base_version)]
-            continue
-        return {
-            "version": v,
-            "deleted_keys": n_keys,
-            "rewritten_files": 0,
-            "scanned_files": 0,
-            "delete_files": len(new_list),
-        }
+        shutil.rmtree(staging, ignore_errors=True)
     raise SnapshotConflictError(
         f"equality delete kept conflicting after {COMMIT_REBASE_RETRIES} "
         f"re-derivations under {table_root}"
@@ -4817,11 +5012,11 @@ def snapshot_rollback(
 
 
 def _eq_scope(
-    spark: SparkSession,
     log: SnapshotLog,
     base_version: int,
+    keys_from: str,
+    n_keys: int,
     key_cols: list[str],
-    keys_df: DataFrame,
     relpaths: list[str],
 ) -> list[str]:
     """Scope of a new equality-delete entry: the base snapshot's files
@@ -4831,19 +5026,24 @@ def _eq_scope(
     still zero data bytes read. Why it matters at 100 TB: the scope is
     compaction's blast radius (every scoped file must rewrite to
     retire the entry), so a keyed GDPR delete on a stats-annotated
-    sort column scopes O(matching files), not O(table). Falls back to
-    the full file list whenever the probe cannot PROVE exclusion
-    (no metadata, key set past MERGE_KEY_PROBE_CAP)."""
+    sort column scopes O(matching files), not O(table). The probe keys
+    are the landed key file under `keys_from/keys/` (_land_keys: one
+    column per key column, in `key_cols` order, no duplicates), read
+    back with pyarrow. Falls back to the full file list whenever the
+    probe cannot PROVE exclusion (no metadata, `n_keys` past
+    MERGE_KEY_PROBE_CAP)."""
+    import pyarrow.parquet as pq
+
     stat_cols, bloom_cols = _parent_meta_cols(log, base_version)
-    if not (stat_cols or bloom_cols):
+    if not (stat_cols or bloom_cols) or n_keys > MERGE_KEY_PROBE_CAP:
         return relpaths
-    klist = keys_df.dropDuplicates().limit(MERGE_KEY_PROBE_CAP + 1).collect()
-    if len(klist) > MERGE_KEY_PROBE_CAP:
-        return relpaths
+    tbl = pq.read_table(posixpath.join(keys_from, "keys"))
     # a key with a NULL component matches no row (SQL equality), so it
     # contributes no files — and must not reach the stats comparators
     probe_keys = [
-        tuple(r) for r in klist if all(v is not None for v in r)
+        k
+        for k in zip(*(c.to_pylist() for c in tbl.columns))
+        if all(v is not None for v in k)
     ]
     if not probe_keys:
         return []
@@ -4867,15 +5067,36 @@ def snapshot_upsert_mor(
     matched keys die logically (the scope excludes the new files, so
     the just-written rows survive); unmatched keys are plain inserts
     whose delete keys match nothing. Zero existing files are read or
-    rewritten — write cost is O(|source|) however big the table is,
-    and `snapshot_compact` amortizes the physical rewrite later.
+    rewritten, and `snapshot_compact` amortizes the physical rewrite
+    later.
 
     Readers between the upsert and the compaction pay the equality
     join; that is the explicit MOR trade. Source keys must be unique
     (the same contract as snapshot_merge — an upsert batch with
-    duplicate keys has no deterministic winner). A crash between the
-    file landing and the commit leaves unreferenced files for
-    sweep_orphans; readers never observe a partial upsert."""
+    duplicate keys has no deterministic winner; NULL keys count as
+    equal, as DISTINCT does).
+
+    Cost model: Spark runs two writes, both O(|source|). The first
+    is one aggregate, `groupBy(keys).count()`, written straight out as
+    the key file (_land_keys); an observation on it gives the source
+    count (sum of the counts) and the distinct count (number of
+    groups), so counting and the uniqueness check cost no extra job.
+    The second is the data landing write. Everything else is metadata
+    the driver already holds, handled with pyarrow on local paths: the
+    scope probe reads the key file back (at most MERGE_KEY_PROBE_CAP
+    keys), the scope list is written with pq.write_table, the entry's
+    keys are hard links to the landed key file, and the child manifest
+    (`_carried_manifest`, keep=None) hard-links the parent's manifest
+    parts and adds one part for the added files' footer stats — the
+    parent manifest is never parsed, so the driver work is O(|added|)
+    at any table size. On a bloom-annotated table one more Spark job
+    builds the added files' bitsets, which read data pages. A lost commit race re-derives only
+    that metadata half. If the upsert fails after landing without a
+    version claiming its files (a conflict on a pinned `version`,
+    retry exhaustion, an error before the claim), it deletes the data
+    files and the entry dir it wrote; a crash, or an error inside the
+    claim itself, leaves them for sweep_orphans. Readers never observe
+    a partial upsert."""
     key_cols = list(key_cols)
     if not key_cols:
         raise ValueError("key_cols must name at least one column")
@@ -4885,75 +5106,95 @@ def snapshot_upsert_mor(
     log = SnapshotLog(spark, table_root)
     log.bootstrap()
     base_version = log.latest() if version is None else version
-    n_source = source_df.count()
-    if n_source == 0:
-        return {
-            "version": base_version,
-            "upserted_keys": 0,
-            "new_files": 0,
-            "rewritten_files": 0,
-            "scanned_files": 0,
-        }
-    keys_df = source_df.select(*key_cols)
-    if keys_df.distinct().count() != n_source:
-        raise ValueError("source keys must be unique for UPSERT")
-    base_files = log.files(base_version)
-    added = _land_spec_files(spark, log, table_root, source_df, base_version)
-    if not added:
-        raise ValueError("snapshot_upsert_mor: the frame wrote no files")
-    # optimistic retry: the EXPENSIVE half (landing the batch's data
-    # files) happened exactly once above and stays valid — a lost race
-    # re-derives only the metadata half (delete-entry scope + carried
-    # manifest) against the new latest. Scope-at-new-latest is the
-    # correct semantics for both race shapes: a concurrent compact's
-    # rewritten files enter the scope (the keys' old versions still
-    # die), and a concurrent upsert's fresh files do too (this commit
-    # is LATER in the log, so for shared keys its rows win —
-    # last-writer-wins, exactly the serial order the log records).
-    for _ in range(COMMIT_REBASE_RETRIES + 1):
-        new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
-        name = None
-        scope_rels = _eq_scope(
-            spark, log, base_version, key_cols, keys_df,
-            [p for p, _ in base_files],
-        ) if base_files else []
-        if scope_rels:
-            scope_df = spark.createDataFrame(
-                [(p,) for p in scope_rels], "relpath string"
-            )
-            name, n_keys = _write_eq_delete_dir(spark, log, keys_df, scope_df)
-            new_list.append([name, n_keys])
-        manifest = _carried_manifest(
-            spark, log, base_version, base_files, added
-        )
-        try:
-            v = log.commit(
-                None,
-                op="mor_upsert",
-                parent=base_version,
-                schema=log.read(base_version).get("schema"),
-                manifest=manifest,
-                extra={"delete_files": new_list},
-            )
-        except SnapshotConflictError:
-            if name is not None:
-                _rm(spark, posixpath.join(log.deletes_dir, name))
-            if version is not None:
-                raise
-            base_version = log.latest()
-            base_files = log.files(base_version)
-            continue
-        return {
-            "version": v,
-            "upserted_keys": n_source,
-            "new_files": len(added),
-            "rewritten_files": 0,
-            "scanned_files": 0,
-        }
-    raise SnapshotConflictError(
-        f"MOR upsert kept conflicting after {COMMIT_REBASE_RETRIES} "
-        f"re-derivations under {table_root}"
+    staging, n_source, n_distinct = _land_keys(
+        spark, log, source_df.select(*key_cols)
     )
+    added: list[tuple[str, int]] = []
+    entry = None  # this attempt's e- dir
+    # True from a version claim on, unless the claim was refused: past
+    # that point a version may reference the landed files
+    claimed = False
+    try:
+        if n_source == 0:
+            return {
+                "version": base_version,
+                "upserted_keys": 0,
+                "new_files": 0,
+                "rewritten_files": 0,
+                "scanned_files": 0,
+            }
+        if n_distinct != n_source:
+            raise ValueError("source keys must be unique for UPSERT")
+        base_files = log.files(base_version)
+        added = _land_spec_files(spark, log, table_root, source_df, base_version)
+        if not added:
+            raise ValueError("snapshot_upsert_mor: the frame wrote no files")
+        # optimistic retry: the EXPENSIVE half (landing the batch's data
+        # and key files) happened exactly once and stays valid — a lost
+        # race re-derives only the metadata half (delete-entry scope +
+        # child manifest) against the new latest. Scope-at-new-latest
+        # is the correct semantics for both race shapes: a concurrent
+        # compact's rewritten files enter the scope (the keys' old
+        # versions still die), and a concurrent upsert's fresh files do
+        # too (this commit is LATER in the log, so for shared keys its
+        # rows win — last-writer-wins, exactly the serial order the log
+        # records).
+        for _ in range(COMMIT_REBASE_RETRIES + 1):
+            new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
+            scope_rels = _eq_scope(
+                log, base_version, staging, n_source, key_cols,
+                [p for p, _ in base_files],
+            ) if base_files else []
+            if scope_rels:
+                entry = _write_eq_delete_dir(log, staging, scope_rels)
+                new_list.append([entry, n_source])
+            manifest = _carried_manifest(spark, log, base_version, None, added)
+            claimed = True
+            try:
+                v = log.commit(
+                    None,
+                    op="mor_upsert",
+                    parent=base_version,
+                    schema=log.read(base_version).get("schema"),
+                    manifest=manifest,
+                    extra={"delete_files": new_list},
+                )
+            except SnapshotConflictError:
+                claimed = False  # refused: nothing of this attempt is live
+                if entry is not None:
+                    shutil.rmtree(posixpath.join(log._deletes_local, entry))
+                    entry = None
+                if version is not None:
+                    raise
+                base_version = log.latest()
+                base_files = log.files(base_version)
+                continue
+            return {
+                "version": v,
+                "upserted_keys": n_source,
+                "new_files": len(added),
+                "rewritten_files": 0,
+                "scanned_files": 0,
+            }
+        raise SnapshotConflictError(
+            f"MOR upsert kept conflicting after {COMMIT_REBASE_RETRIES} "
+            f"re-derivations under {table_root}"
+        )
+    finally:
+        if not claimed:
+            # no version references what this upsert landed
+            root_local = _uri_path(table_root)
+            for rel, _ in added:
+                try:
+                    os.remove(posixpath.join(root_local, rel))
+                except FileNotFoundError:
+                    pass
+            if entry is not None:
+                shutil.rmtree(
+                    posixpath.join(log._deletes_local, entry),
+                    ignore_errors=True,
+                )
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _file_may_hold(

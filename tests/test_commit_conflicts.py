@@ -236,6 +236,125 @@ def test_mor_upsert_rebases_across_concurrent_append(
     assert got.filter("id = 7").count() == 1
 
 
+def test_mor_upsert_failure_leaves_no_orphans(spark, tmp_path, monkeypatch):
+    """An upsert that raises AFTER landing its batch — a conflict on a
+    caller-pinned version, or retry exhaustion — deletes the data files
+    it landed and its `_tmp-*` key staging dir: nothing is left for
+    sweep_orphans, and no entry dir of a lost attempt survives."""
+    root = _tbl(spark, tmp_path)
+    deletes = os.path.join(root, "_snapshots", "deletes")
+    landed = []
+    orig_land = S._land_spec_files
+
+    def recording_land(*a, **k):
+        out = orig_land(*a, **k)
+        landed.extend(out)
+        return out
+
+    monkeypatch.setattr(S, "_land_spec_files", recording_land)
+
+    def leftovers():
+        log = SnapshotLog(spark, root)
+        referenced = {p for v in log.versions() for p, _ in log.files(v)}
+        on_disk = {
+            os.path.relpath(os.path.join(d, n), root)
+            for d, _, names in os.walk(root)
+            if "_snapshots" not in d
+            for n in names
+            if n.startswith("append-")
+        }
+        staged = [
+            n for n in (os.listdir(deletes) if os.path.isdir(deletes) else [])
+            if n.startswith("_tmp-")
+        ]
+        return on_disk - referenced, staged
+
+    batch = spark.createDataFrame([(7, 14_000), (601, 1)], "id long, v long")
+    pinned = SnapshotLog(spark, root).latest()
+    state = _install_race(
+        monkeypatch, lambda: _land_append(spark, root, [(600, 0)])
+    )
+    with pytest.raises(SnapshotConflictError):
+        S.snapshot_upsert_mor(spark, root, batch, ["id"], version=pinned)
+    assert state["fired"] and landed
+    assert leftovers() == (set(), [])
+    assert not any(os.path.exists(os.path.join(root, p)) for p, _ in landed)
+    # every attempt loses: the bounded retry gives up, then cleans up
+    landed.clear()
+    orig_commit = SnapshotLog.commit
+    counter = {"n": 0}
+
+    def always_racing(self, *a, **k):
+        if k.get("op") == "mor_upsert":
+            counter["n"] += 1
+            _land_append(spark, root, [(2000 + counter["n"], 0)])
+        return orig_commit(self, *a, **k)
+
+    monkeypatch.setattr(SnapshotLog, "commit", always_racing)
+    with pytest.raises(SnapshotConflictError, match="kept conflicting"):
+        S.snapshot_upsert_mor(spark, root, batch, ["id"])
+    assert counter["n"] == S.COMMIT_REBASE_RETRIES + 1 and landed
+    assert leftovers() == (set(), [])
+    log = SnapshotLog(spark, root)
+    entries = {n for v in log.versions() for n, _ in log.delete_files(v)}
+    assert set(os.listdir(deletes)) <= entries  # no lost attempt's e- dir
+
+
+def test_mor_upsert_cleanup_follows_the_claim(spark, tmp_path, monkeypatch):
+    """The upsert's cleanup removes only what no version can reference.
+    An error before the version claim (here in the child-manifest
+    build) deletes the landed data files and the attempt's entry dir;
+    an error inside the claim, after the version JSON is already linked
+    into place, keeps them, because that version references them."""
+    root = _tbl(spark, tmp_path)
+    deletes = os.path.join(root, "_snapshots", "deletes")
+    log = SnapshotLog(spark, root)
+    v0 = log.latest()
+    landed = []
+    orig_land = S._land_spec_files
+
+    def recording_land(*a, **k):
+        out = orig_land(*a, **k)
+        landed.extend(out)
+        return out
+
+    monkeypatch.setattr(S, "_land_spec_files", recording_land)
+    batch = spark.createDataFrame([(7, 14_000), (601, 1)], "id long, v long")
+
+    def broken_manifest(*a, **k):
+        raise OSError("manifest volume full")
+
+    orig_manifest = S._carried_manifest
+    monkeypatch.setattr(S, "_carried_manifest", broken_manifest)
+    with pytest.raises(OSError, match="volume full"):
+        S.snapshot_upsert_mor(spark, root, batch, ["id"])
+    monkeypatch.setattr(S, "_carried_manifest", orig_manifest)
+    assert log.latest() == v0 and landed
+    assert not any(os.path.exists(os.path.join(root, p)) for p, _ in landed)
+    assert os.listdir(deletes) == []  # no entry dir, no key staging
+
+    orig_claim = S.PureSnapshotLog._claim_version
+
+    def claim_then_fail(self, n, payload):
+        orig_claim(self, n, payload)
+        raise OSError("tmp unlink failed")
+
+    landed.clear()
+    monkeypatch.setattr(S.PureSnapshotLog, "_claim_version", claim_then_fail)
+    with pytest.raises(OSError, match="unlink"):
+        S.snapshot_upsert_mor(spark, root, batch, ["id"])
+    monkeypatch.setattr(S.PureSnapshotLog, "_claim_version", orig_claim)
+    assert log.latest() == v0 + 1 and landed
+    assert all(os.path.exists(os.path.join(root, p)) for p, _ in landed)
+    assert all(
+        os.path.isdir(os.path.join(deletes, n))
+        for n, _ in log.delete_files(v0 + 1)
+    )
+    got = read_table_at(spark, root)
+    assert got.count() == 41
+    assert got.filter("id = 7").collect()[0]["v"] == 14_000
+
+
 def test_rebase_bounded_retries_exhaust(spark, tmp_path, monkeypatch):
     """A writer that loses EVERY retry must surface the conflict after
     the bounded attempt count, not spin forever."""

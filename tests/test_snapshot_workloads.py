@@ -1306,6 +1306,138 @@ def test_mor_upsert_cdc_and_spec_layout(spark, tmp_path):
     assert got[3] == 333 and got[50] == 5000 and len(got) == 11
 
 
+def _manifest_rows(tbl):
+    return set(
+        zip(*(tbl.column(c).to_pylist()
+              for c in ("relpath", "size", "stats", "blooms")))
+    )
+
+
+@pytest.mark.parametrize("parent", ["stats_blooms", "sharded"])
+def test_mor_upsert_manifest_matches_carried(spark, tmp_path, parent):
+    """The upsert's child manifest (`_carried_manifest` with keep=None:
+    the parent's parts hard-linked, nothing parsed) holds row for row
+    what the rewrite paths' route builds (keep = every parent file,
+    filtered on executors): parent rows carried with their payloads,
+    added files annotated on the same stat and bloom columns — on a
+    stats+bloom table and on a range-sharded parent manifest."""
+    import json
+    import os
+
+    import hbase_compact_spark.compaction.snapshots as S
+
+    root = _mor_table(spark, tmp_path)  # stats on id
+    if parent == "stats_blooms":
+        S.annotate_blooms(spark, root, cols=["id"])
+    else:
+        S.shard_manifest(spark, root, by="id", shards=2)
+    log = SnapshotLog(spark, root)
+    base = log.latest()
+    base_files = log.files(base)
+    src = spark.createDataFrame([(5, 500), (100, 1000)], "id long, v long")
+    v = S.snapshot_upsert_mor(spark, root, src, ["id"])["version"]
+    added = sorted(set(log.files(v)) - set(base_files))
+    assert added
+    carried = S._carried_manifest(spark, log, base, base_files, added)
+    want = _manifest_rows(S._read_manifest_table(log._manifest_local(carried)))
+    got = _manifest_rows(log.manifest_table(v))
+    assert got == want
+    # the parent's parts are shared by hard link, not re-encoded
+    parent_man = log._manifest_local(log.read(base)["manifest"])
+    child_man = log._manifest_local(log.read(v)["manifest"])
+    parent_parts = (
+        S._parquet_parts(parent_man) if os.path.isdir(parent_man)
+        else [parent_man]
+    )
+    assert parent_parts and all(
+        os.path.samefile(p, os.path.join(child_man, os.path.basename(p)))
+        for p in parent_parts
+    )
+    # not vacuous: the added rows carry the parent's annotations (an
+    # empty landed file has a row count but no column range)
+    new_rows = [r for r in got if (r[0], r[1]) in set(added)]
+    filled = [r for r in new_rows if json.loads(r[2])["rows"]]
+    assert filled and all("id" in json.loads(r[2])["cols"] for r in filled)
+    if parent == "stats_blooms":
+        assert all("id" in json.loads(r[3]) for r in new_rows)
+
+
+def test_mor_upsert_merges_small_manifest_parts(spark, tmp_path, monkeypatch):
+    """Each upsert links its parent's manifest parts and adds one; once
+    MANIFEST_MERGE_PARTS parent parts are small, the child merges them
+    into one. The part count stays bounded over a stream of upserts,
+    and no manifest row is lost or duplicated by a merge."""
+    import os
+
+    import hbase_compact_spark.compaction.snapshots as S
+
+    monkeypatch.setattr(S, "MANIFEST_MERGE_PARTS", 3)
+    root = _mor_table(spark, tmp_path)
+    log = SnapshotLog(spark, root)
+    counts, merged = [], 0
+    for i in range(6):
+        parent = log.latest()
+        want = log.manifest_table(parent)
+        src = spark.createDataFrame([(1000 + i, i)], "id long, v long")
+        v = S.snapshot_upsert_mor(spark, root, src, ["id"])["version"]
+        man = log._manifest_local(log.read(v)["manifest"])
+        counts.append(len(S._parquet_parts(man)))
+        merged += any(n.startswith("merged-") for n in os.listdir(man))
+        got = _manifest_rows(log.manifest_table(v))
+        added = sorted(set(log.files(v)) - set(log.files(parent)))
+        assert added and _manifest_rows(want) <= got
+        assert len(got) == want.num_rows + len(added) == len(log.files(v))
+    assert merged and max(counts) <= 3 + 1, counts
+    got = {r["id"]: r["v"] for r in read_table_at(spark, root).collect()}
+    assert all(got[1000 + i] == i for i in range(6))
+
+
+def test_mor_upsert_null_keys_are_duplicates(spark, tmp_path):
+    """Two source rows with a NULL key are duplicate keys (GROUP BY and
+    DISTINCT treat NULLs as equal): the upsert refuses before landing
+    anything."""
+    from hbase_compact_spark.compaction.snapshots import snapshot_upsert_mor
+
+    root = _mor_table(spark, tmp_path)
+    log = SnapshotLog(spark, root)
+    v = log.latest()
+    src = spark.createDataFrame([(None, 1), (None, 2)], "id long, v long")
+    with pytest.raises(ValueError, match="unique"):
+        snapshot_upsert_mor(spark, root, src, ["id"])
+    assert log.latest() == v
+
+
+def test_mor_upsert_spark_job_budget(spark, tmp_path):
+    """One upsert on a stats-annotated table starts at most 6 Spark
+    jobs: the key aggregate, written straight out as the key file, and
+    the data landing write. The scope, the child manifest and the
+    entry's keys are driver-side metadata. Counted by job group, so
+    jobs of other threads are not."""
+    import uuid
+
+    from hbase_compact_spark.compaction.snapshots import snapshot_upsert_mor
+
+    root = _mor_table(spark, tmp_path)
+    src = spark.createDataFrame(
+        [(i, i) for i in range(0, 60, 3)], "id long, v long"
+    )
+    sc = spark.sparkContext
+    group = f"upsert-budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "snapshot_upsert_mor job budget")
+    try:
+        res = snapshot_upsert_mor(spark, root, src, ["id"])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert res["upserted_keys"] == 20
+    assert 3 <= len(jobs) <= 6, jobs
+    assert read_table_at(spark, root).count() == 40 + 6  # 14 updates, 6 inserts
+
+
 def test_eqdelete_scope_probed_from_stats(spark, tmp_path, monkeypatch):
     """The equality entry's scope — compaction's blast radius — must
     shrink to the files the manifest stats cannot rule out (the
@@ -1371,16 +1503,16 @@ def test_sweep_orphans_reclaims_uncommitted_delete_entries(spark, tmp_path):
         spark, root, spark.createDataFrame([(7,)], "id long")
     )
     live = log.delete_files(log.latest())[0][0]
-    # orphan entry: landed but never committed (simulated crash)
-    scope = spark.createDataFrame([("x",)], "relpath string")
-    keys = spark.createDataFrame([(1,)], "id long")
-    orphan, _ = S._write_eq_delete_dir(spark, log, keys, scope)
+    # orphan entry: landed but never committed (simulated crash); it
+    # shares the live entry's key files, as a retried commit would
+    deletes = os.path.join(root, "_snapshots", "deletes")
+    orphan = S._write_eq_delete_dir(log, os.path.join(deletes, live), ["x"])
     res = S.sweep_orphans(spark, root, grace_seconds=0.0)
     assert res["deleted_delete_entries"] == 1
-    left = set(os.listdir(os.path.join(root, "_snapshots", "deletes")))
+    left = set(os.listdir(deletes))
     assert live in left and orphan not in left
     # grace period protects an in-flight commit's fresh entry
-    orphan2, _ = S._write_eq_delete_dir(spark, log, keys, scope)
+    orphan2 = S._write_eq_delete_dir(log, os.path.join(deletes, live), ["x"])
     res2 = S.sweep_orphans(spark, root, grace_seconds=3600.0)
     assert res2["deleted_delete_entries"] == 0
     assert orphan2 in set(
